@@ -16,7 +16,11 @@ kernels/    pure-NumPy semantic kernels — the single source of truth for
             Arrow UDFs so Spark results byte-match the oracle by construction.
 sources/    deterministic corpus generators + UCR-format reader.
 operators/  Spark DataFrame operators (windowing, preprocessing, detection,
-            thresholding, evaluation, dedup, text, similarity).
+            thresholding, evaluation, temporal joins).
+pipelines/  training-data operators (text dedup, tokenizers, similarity
+            search, multimodal decoders, relational and event analytics)
+            behind the ``__spark_entry__.py`` queries; the rollup engine
+            does not run them.
 rollup/     the retention-tier engine: continuous aggregates, gap-fill,
             compression, partitioning, checkpoint/lineage.
 streaming/  Structured Streaming variant of the rollup.

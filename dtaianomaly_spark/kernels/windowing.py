@@ -435,8 +435,11 @@ def asap_window(x: np.ndarray, max_frac: float = 0.1) -> tuple:
 def mann_kendall_s(x: np.ndarray, block: int = 256) -> int:
     """Mann-Kendall S statistic: S = Σ_{i<j} sign(x_j − x_i), the
     integer concordance count behind the classic nonparametric trend
-    test (Mann 1945, Kendall 1975). Blocked pairwise evaluation keeps
-    peak memory at block·n int8s regardless of series length."""
+    test (Mann 1945, Kendall 1975). Pairs are evaluated ``block`` rows
+    at a time, so peak memory grows with block·n, not n²: each block
+    holds a block×n float64 difference matrix, a block×n bool mask, and
+    the masked float64 differences and their signs — about 25·block·n
+    bytes (≈ 64 MB at the default block and n = 10 000)."""
     x = np.asarray(x, dtype=np.float64)
     n = x.shape[0]
     s = 0

@@ -293,11 +293,11 @@ def apply_retention(
         n - (bucket + 1) * ticks[tier] < horizon[tier]
 
     ``tiered`` is the union-of-tiers shape (doc_id, tier, bucket, ...);
-    ``series_n`` is (doc_id, n). Pure relational row filter — on a
-    partitioned store this predicate IS the partition-drop condition
-    (the commit log in streaming/incremental.py deletes whole bucket
-    ranges without touching surviving files), so retention costs
-    metadata, not a rewrite."""
+    ``series_n`` is (doc_id, n). Pure relational row filter applied
+    at read time: expired rows are hidden from the result but stay on
+    disk, and no code deletes files or bucket ranges from a store. On a
+    store partitioned by bucket, this predicate is also the condition
+    under which a whole partition could be dropped."""
     if tier_ticks is None:
         tier_ticks = TIER_TICKS
     cases = " ".join(

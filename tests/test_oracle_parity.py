@@ -5,8 +5,10 @@ runs on DuckDB over the same parquet; results must match exactly
 the driver runs the same comparison at sf0.01.
 """
 
+import importlib
 import math
 import os
+import pkgutil
 import sys
 
 import duckdb
@@ -15,6 +17,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod
+import dtaianomaly_spark
 
 SF_DIR = os.environ.get("PARITY_SF_DIR", "/root/testdata/sf0.001")
 
@@ -75,3 +78,13 @@ def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     assert df.count() > 0
     assert {f.name for f in df.schema.fields} >= {"doc_id", "tier", "bucket", "cnt"}
+
+
+def test_every_module_imports_and_every_oracle_has_a_query():
+    """A dangling import in a module no other test touches, or an
+    oracle entry whose query is gone, fails here."""
+    for mod in pkgutil.walk_packages(
+        dtaianomaly_spark.__path__, dtaianomaly_spark.__name__ + "."
+    ):
+        importlib.import_module(mod.name)
+    assert set(entry_mod.oracle_sql()) <= set(entry_mod.queries())
