@@ -2,11 +2,13 @@
 (timestamps, counts) and XOR compression for float streams (per-window
 means/stds), per the Gorilla paper (Pelkonen et al., VLDB 2015).
 
-Encoding is fully vectorized NumPy bit-packing (no Python loop over
-values): each value maps to one or two (code, bit-length) pairs; the pairs
-are exploded to a flat bit vector with repeat/arange arithmetic and packed
-with ``np.packbits``. Decoding walks the prefix codes sequentially (it is
-only used on the read path and in round-trip tests).
+Encoding maps each value to one or two (code, bit-length) pairs; the
+pairs are exploded to a flat bit vector with repeat/arange arithmetic and
+packed with ``np.packbits``. ``dod_encode`` computes its codes with NumPy
+only. ``xor_encode`` decides window reuse in a per-value Python control
+loop, then builds its codes with NumPy. Both decoders walk the prefix
+codes in Python and read the bit stream one bit at a time; they run on
+the read path and in round-trip tests.
 
 Wire formats
 ------------

@@ -26,92 +26,15 @@ import numpy as np
 STAT_FIELDS = ("count", "sum", "sumsq", "min", "max", "first", "last")
 
 
-def bucket_stats(values: np.ndarray, bucket_ids: np.ndarray, n_buckets: int) -> Dict[str, np.ndarray]:
-    """Exact integer partials per bucket. ``bucket_ids`` must be sorted
-    ascending (positions are naturally ordered); empty buckets get
-    count=0 and are the gap-fill targets."""
-    v = np.asarray(values, dtype=np.int64)
-    b = np.asarray(bucket_ids, dtype=np.int64)
-    cnt = np.bincount(b, minlength=n_buckets).astype(np.int64)
-    s = np.bincount(b, weights=v, minlength=n_buckets).astype(np.int64)
-    sq = np.bincount(b, weights=v * v, minlength=n_buckets).astype(np.int64)
-
-    mn = np.full(n_buckets, np.iinfo(np.int64).max, dtype=np.int64)
-    mx = np.full(n_buckets, np.iinfo(np.int64).min, dtype=np.int64)
-    np.minimum.at(mn, b, v)
-    np.maximum.at(mx, b, v)
-
-    first = np.zeros(n_buckets, dtype=np.int64)
-    last = np.zeros(n_buckets, dtype=np.int64)
-    # sorted bucket_ids: boundaries give first/last directly
-    if v.shape[0]:
-        starts = np.searchsorted(b, np.arange(n_buckets), side="left")
-        ends = np.searchsorted(b, np.arange(n_buckets), side="right")
-        nonempty = ends > starts
-        first[nonempty] = v[starts[nonempty]]
-        last[nonempty] = v[ends[nonempty] - 1]
-    empty = cnt == 0
-    mn[empty] = 0
-    mx[empty] = 0
-    return {
-        "count": cnt, "sum": s, "sumsq": sq,
-        "min": mn, "max": mx, "first": first, "last": last,
-    }
-
-
-def tumbling_stats(values: np.ndarray, bucket_size: int) -> Dict[str, np.ndarray]:
-    """Stats over tumbling buckets of ``bucket_size`` positions (the raw
-    tier: every position belongs to bucket ``pos // bucket_size``)."""
-    v = np.asarray(values, dtype=np.int64)
-    n = v.shape[0]
-    n_buckets = -(n // -bucket_size) if n else 0
-    ids = np.arange(n, dtype=np.int64) // bucket_size
-    return bucket_stats(v, ids, n_buckets)
-
-
-def merge_stats(parts: Dict[str, np.ndarray], group_ids: np.ndarray, n_groups: int) -> Dict[str, np.ndarray]:
-    """Compose lower-tier partials into a higher tier (1m -> 1h). Exact:
-    integer sums re-sum, min/max re-extreme, first/last by bucket order
-    (``group_ids`` sorted ascending)."""
-    g = np.asarray(group_ids, dtype=np.int64)
-    cnt = np.bincount(g, weights=parts["count"], minlength=n_groups).astype(np.int64)
-    s = np.bincount(g, weights=parts["sum"], minlength=n_groups).astype(np.int64)
-    sq = np.bincount(g, weights=parts["sumsq"], minlength=n_groups).astype(np.int64)
-
-    nonempty_src = parts["count"] > 0
-    mn = np.full(n_groups, np.iinfo(np.int64).max, dtype=np.int64)
-    mx = np.full(n_groups, np.iinfo(np.int64).min, dtype=np.int64)
-    np.minimum.at(mn, g[nonempty_src], parts["min"][nonempty_src])
-    np.maximum.at(mx, g[nonempty_src], parts["max"][nonempty_src])
-
-    first = np.zeros(n_groups, dtype=np.int64)
-    last = np.zeros(n_groups, dtype=np.int64)
-    idx_ne = np.flatnonzero(nonempty_src)
-    if idx_ne.shape[0]:
-        g_ne = g[idx_ne]
-        starts = np.searchsorted(g_ne, np.arange(n_groups), side="left")
-        ends = np.searchsorted(g_ne, np.arange(n_groups), side="right")
-        has = ends > starts
-        first[has] = parts["first"][idx_ne[starts[has]]]
-        last[has] = parts["last"][idx_ne[ends[has] - 1]]
-    empty = cnt == 0
-    mn[empty] = 0
-    mx[empty] = 0
-    return {
-        "count": cnt, "sum": s, "sumsq": sq,
-        "min": mn, "max": mx, "first": first, "last": last,
-    }
-
-
 def contiguous_stats(values: np.ndarray, starts: np.ndarray) -> Dict[str, np.ndarray]:
     """Stats over *contiguous, non-empty* bucket ranges: bucket ``k`` spans
     ``values[starts[k] : starts[k+1]]`` (last bucket runs to the end).
 
-    This is the hot-path variant of :func:`bucket_stats` for dense tumbling
-    windows (the map rollup): ``np.add.reduceat`` keeps accumulation in
-    **exact int64** (no float64 round-trip, valid beyond 2**53) and touches
-    each value once per statistic. Requires every bucket non-empty — true
-    for tumbling buckets over dense position grids."""
+    Used for dense tumbling windows (the map rollup): ``np.add.reduceat``
+    keeps accumulation in **exact int64** (no float64 round-trip, valid
+    beyond 2**53) and touches each value once per statistic. Requires
+    every bucket non-empty — true for tumbling buckets over dense
+    position grids."""
     v = np.ascontiguousarray(values)
     if v.dtype.kind not in "iu":
         v = v.astype(np.int64)
@@ -136,7 +59,8 @@ def contiguous_stats(values: np.ndarray, starts: np.ndarray) -> Dict[str, np.nda
 
 def merge_contiguous(parts: Dict[str, np.ndarray], starts: np.ndarray) -> Dict[str, np.ndarray]:
     """Compose contiguous non-empty lower-tier partials into a higher tier
-    (exact-int64 counterpart of :func:`merge_stats` for the dense path)."""
+    (1m -> 1h). Exact: integer sums re-sum, min/max re-extreme, first/last
+    by bucket order."""
     s = np.asarray(starts, dtype=np.intp)
     n = parts["count"].shape[0]
     ends = np.empty_like(s)

@@ -1,18 +1,19 @@
 """Compressed rollup tier: Gorilla XOR + delta-of-delta columns.
 
-North-rule feature: per-window statistics at each retention tier are
-stored as per-series compressed blocks — delta-of-delta for the integer
-stats (bucket ids are arithmetic sequences → ~1 bit/point; counts and
-sums are locally smooth), Gorilla XOR for the derived floats — one
-``BinaryType`` column per statistic (kernels/codec.py; Facebook Gorilla,
-VLDB'15 §4.1, reimplemented from the paper's bit layouts).
+Per-window statistics at each retention tier are stored as per-series
+compressed blocks: delta-of-delta for the integer stats (bucket ids are
+arithmetic sequences, ~1 bit/point; counts and sums are locally smooth)
+and Gorilla XOR for the derived floats, one ``BinaryType`` column per
+statistic (kernels/codec.py; Facebook Gorilla, VLDB'15 §4.1,
+reimplemented from the paper's bit layouts).
 
-Physical shape: one ``collect_list(struct)`` per (series, tier) —
-co-partitioned with the rollup output, so at scale this is the only
-shuffle — followed by a vectorized Arrow encode pass. Decompression is
-the exact inverse; round-trip equality is part of the test suite, and
-the rollup store can therefore serve queries straight from compressed
-blocks (decode is a narrow map).
+Physical shape: :func:`rollup_compress_map` is one map-only
+``mapInArrow`` pass. It rolls each Arrow batch up with the batched
+kernel behind :func:`~dtaianomaly_spark.rollup.tiers.rollup_tiers_map`
+and encodes each (series, tier) as one row of blocks. Decompression
+(:func:`decompress_tiers`) is the exact inverse and is also a narrow
+map; the round trip is tested, so queries can be served straight from
+compressed blocks.
 """
 
 from __future__ import annotations
@@ -28,7 +29,7 @@ from pyspark.sql.types import (
 )
 
 from dtaianomaly_spark.kernels import codec as KC
-from dtaianomaly_spark.rollup.tiers import ROLLUP_SCHEMA
+from dtaianomaly_spark.rollup.tiers import ROLLUP_SCHEMA, _rollup_arrow_batch
 
 INT_COLS = ("bucket", "cnt", "sum", "sumsq", "min", "max", "first", "last")
 FLOAT_COLS = ("mean", "std")
@@ -44,101 +45,45 @@ COMPRESSED_SCHEMA = StructType(
 )
 
 
-def compress_tiers(rollup: DataFrame) -> DataFrame:
-    """Rollup rows -> one compressed block row per (doc_id, tier)."""
-    packed = (
-        rollup.groupBy("doc_id", "tier")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct(*INT_COLS, *FLOAT_COLS))
-            ).alias("pts")
-        )
-    )
+def _encode_tier_batch(tb):
+    """Encode one per-tier RecordBatch of :func:`_rollup_arrow_batch` as
+    compressed blocks. Its rows are series-contiguous with buckets
+    counting up from 0, so every ``bucket == 0`` starts a new block."""
+    import pyarrow as pa
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, tier, pts in zip(pdf["doc_id"], pdf["tier"], pdf["pts"]):
-                n = len(pts)
-                row = [doc_id, tier, n]
-                enc_bytes = 0
-                for c in INT_COLS:
-                    enc = KC.dod_encode(
-                        np.array([p[c] for p in pts], dtype=np.int64)
-                    )
-                    enc_bytes += len(enc)
-                    row.append(enc)
-                for c in FLOAT_COLS:
-                    vals = np.array(
-                        [np.nan if p[c] is None else p[c] for p in pts],
-                        dtype=np.float64,
-                    )
-                    enc = KC.xor_encode(vals)
-                    enc_bytes += len(enc)
-                    row.append(enc)
-                raw = n * (8 * len(INT_COLS) + 8 * len(FLOAT_COLS))
-                row += [raw, enc_bytes]
-                rows.append(tuple(row))
-            if rows:
-                yield pd.DataFrame(rows, columns=COMPRESSED_SCHEMA.names)
+    def col(name):
+        return tb.column(tb.schema.get_field_index(name))
 
-    return packed.mapInPandas(run, COMPRESSED_SCHEMA)
+    heads = np.flatnonzero(col("bucket").to_numpy() == 0)
+    bounds = np.append(heads, tb.num_rows)
+    n_points = np.diff(bounds)
+    blocks = list(zip(bounds[:-1], bounds[1:]))
+    arrays = [col("doc_id").take(heads), col("tier").take(heads),
+              pa.array(n_points)]
+    enc_bytes = np.zeros(heads.shape[0], dtype=np.int64)
+    for cols, encode in ((INT_COLS, KC.dod_encode), (FLOAT_COLS, KC.xor_encode)):
+        for c in cols:
+            v = col(c).to_numpy()
+            enc = [encode(v[s:e]) for s, e in blocks]
+            enc_bytes += [len(b) for b in enc]
+            arrays.append(pa.array(enc, type=pa.binary()))
+    raw_bytes = n_points * 8 * (len(INT_COLS) + len(FLOAT_COLS))
+    arrays += [pa.array(raw_bytes), pa.array(enc_bytes)]
+    return pa.RecordBatch.from_arrays(arrays, names=COMPRESSED_SCHEMA.names)
 
 
 def rollup_compress_map(corpus: DataFrame, tiers=("raw", "1m", "1h")) -> DataFrame:
-    """FUSED rollup + compress: one Arrow pass from token arrays straight
-    to compressed tier blocks — no intermediate point rows, no
-    collect_list shuffle. This is the production write path at scale:
-    scan → mapInArrow → parquet append, zero wide dependencies; the
-    separate :func:`compress_tiers` regroup exists for compressing an
-    already-materialized rollup table."""
-    import pyarrow as pa
-
-    from dtaianomaly_spark.kernels import stats as K
-    from dtaianomaly_spark.rollup.tiers import rollup_series
+    """Fused rollup + compress: one Arrow pass from token arrays straight
+    to compressed tier blocks, with no intermediate point rows and no
+    shuffle (scan -> mapInArrow -> parquet append). The statistics come
+    from ``_rollup_arrow_batch``, the batched kernel behind
+    :func:`~dtaianomaly_spark.rollup.tiers.rollup_tiers_map`; each
+    series' rows of each tier are then encoded as one block."""
 
     def run(batches):
         for batch in batches:
-            la = batch.column(batch.schema.get_field_index("tokens"))
-            doc_ids = batch.column(
-                batch.schema.get_field_index("doc_id")
-            ).to_pylist()
-            rows = []
-            for doc_id, tokens in zip(doc_ids, la.to_pylist()):
-                x = np.asarray(tokens, dtype=np.int64)
-                if x.shape[0] == 0:
-                    continue
-                stats = rollup_series(x)
-                for tier in tiers:
-                    st = stats[tier]
-                    n = st["count"].shape[0]
-                    mean, std = K.derive_mean_std(
-                        st["count"], st["sum"], st["sumsq"]
-                    )
-                    cols = {
-                        "bucket": np.arange(n, dtype=np.int64),
-                        "cnt": st["count"], "sum": st["sum"],
-                        "sumsq": st["sumsq"], "min": st["min"],
-                        "max": st["max"], "first": st["first"],
-                        "last": st["last"],
-                    }
-                    row = [doc_id, tier, n]
-                    enc_bytes = 0
-                    for c in INT_COLS:
-                        enc = KC.dod_encode(cols[c])
-                        enc_bytes += len(enc)
-                        row.append(enc)
-                    for vals in (mean, std):
-                        enc = KC.xor_encode(vals)
-                        enc_bytes += len(enc)
-                        row.append(enc)
-                    row += [n * 80, enc_bytes]
-                    rows.append(tuple(row))
-            if rows:
-                yield pa.RecordBatch.from_pandas(
-                    pd.DataFrame(rows, columns=COMPRESSED_SCHEMA.names),
-                    preserve_index=False,
-                )
+            for tb in _rollup_arrow_batch(batch, tiers):
+                yield _encode_tier_batch(tb)
 
     return corpus.select(
         F.col("doc_id").cast("string").alias("doc_id"), "tokens"
@@ -146,17 +91,20 @@ def rollup_compress_map(corpus: DataFrame, tiers=("raw", "1m", "1h")) -> DataFra
 
 
 def decompress_tiers(compressed: DataFrame) -> DataFrame:
-    """Exact inverse of :func:`compress_tiers`: back to rollup rows."""
+    """Exact inverse of :func:`rollup_compress_map`: compressed blocks
+    back to rollup rows."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        enc_cols = INT_COLS + FLOAT_COLS
         for pdf in batches:
             frames = []
-            for _, r in pdf.iterrows():
-                cols = {"doc_id": r["doc_id"], "tier": r["tier"]}
-                for c in INT_COLS:
-                    cols[c] = KC.dod_decode(bytes(r[f"{c}_enc"]))
-                for c in FLOAT_COLS:
-                    cols[c] = KC.xor_decode(bytes(r[f"{c}_enc"]))
+            for doc_id, tier, *blobs in zip(
+                pdf["doc_id"], pdf["tier"], *(pdf[f"{c}_enc"] for c in enc_cols)
+            ):
+                cols = {"doc_id": doc_id, "tier": tier}
+                for c, b in zip(enc_cols, blobs):
+                    decode = KC.dod_decode if c in INT_COLS else KC.xor_decode
+                    cols[c] = decode(bytes(b))
                 frames.append(pd.DataFrame(cols))
             if frames:
                 yield pd.concat(frames, ignore_index=True)[

@@ -14,9 +14,11 @@ Two physical strategies, same semantics:
 
 * :func:`rollup_tiers_map` — the 100-TB path. Each series is one row
   (``tokens array<int>``), so all three tiers are computed inside one
-  Arrow ``mapInPandas`` pass: **zero shuffle**, map-only, embarrassingly
-  parallel across executors; the kernel is the same NumPy code the pytest
-  oracle runs (kernels/stats.py).
+  Arrow ``mapInArrow`` pass: **zero shuffle**, map-only, embarrassingly
+  parallel across executors; the kernels are the exact-int64
+  ``contiguous_stats``/``merge_contiguous`` in kernels/stats.py, and
+  :func:`~dtaianomaly_spark.rollup.compress.rollup_compress_map` runs
+  the same batched rollup before encoding.
 
 * :func:`rollup_relational` — pure DataFrame ops over the exploded long
   form: ``groupBy(doc_id, pos div bucket)`` hash aggregate (Catalyst gives
@@ -74,18 +76,6 @@ ROLLUP_SCHEMA = StructType(
         StructField("std", DoubleType(), True),
     ]
 )
-
-
-def rollup_series(tokens: np.ndarray) -> dict:
-    """All-tier rollup of one series via the shared kernels; the pytest
-    oracle calls exactly this."""
-    raw = K.tumbling_stats(tokens, RAW_BUCKET_TICKS)
-    n_raw = raw["count"].shape[0]
-    n_1m = -(n_raw // -M1_FACTOR) if n_raw else 0
-    m1 = K.merge_stats(raw, np.arange(n_raw) // M1_FACTOR, n_1m)
-    n_1h = -(n_1m // -H1_FACTOR) if n_1m else 0
-    h1 = K.merge_stats(m1, np.arange(n_1m) // H1_FACTOR, n_1h)
-    return {"raw": raw, "1m": m1, "1h": h1}
 
 
 def _offsets(counts: np.ndarray) -> np.ndarray:
@@ -225,7 +215,7 @@ def rollup_relational(long_form: DataFrame, bucket_ticks: int, tier: str) -> Dat
 
 def compose_tier(lower: DataFrame, factor: int, tier: str) -> DataFrame:
     """Exact partial+final composition of a higher tier from a lower one
-    (relational form of kernels.stats.merge_stats)."""
+    (relational form of kernels.stats.merge_contiguous)."""
     comp = (
         lower
         .withColumn("parent", (F.col("bucket") / factor).cast("long"))

@@ -12,7 +12,7 @@ committed batch ids are skipped — the anti-join of work-units against the
 commit log.
 
 The same rollup kernel also runs under real Structured Streaming
-(:func:`stream_rollup`): files-source → ``mapInPandas`` rollup →
+(:func:`stream_rollup`): files-source → ``mapInArrow`` rollup →
 ``foreachBatch`` append with Spark's own streaming checkpoint; one code
 path, two execution modes — exactly the "continuous aggregate built as
 incremental batch" design in SURVEY.md §2.9.
@@ -54,8 +54,11 @@ class IncrementalRollup:
         }
 
     def _append_commit(self, rec: dict) -> None:
-        """Atomic append: copy-on-write + rename (POSIX rename is atomic;
-        on an object store this is the Iceberg metadata swap)."""
+        """Atomic, durable append: copy-on-write + rename (POSIX rename is
+        atomic; on an object store this is the Iceberg metadata swap). The
+        temp file is fsynced before the rename and the directory after
+        it, so a crash leaves either the old log or the new one, never an
+        empty or truncated file."""
         tmp = os.path.join(self.ckpt_dir, f".tmp-{uuid.uuid4().hex}")
         existing = ""
         if os.path.exists(self.log_path):
@@ -63,7 +66,14 @@ class IncrementalRollup:
                 existing = f.read()
         with open(tmp, "w") as f:
             f.write(existing + json.dumps(rec) + "\n")
+            f.flush()
+            os.fsync(f.fileno())
         os.replace(tmp, self.log_path)
+        dir_fd = os.open(self.ckpt_dir, os.O_RDONLY)
+        try:
+            os.fsync(dir_fd)
+        finally:
+            os.close(dir_fd)
 
     # -- processing ---------------------------------------------------------
 

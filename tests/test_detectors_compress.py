@@ -79,7 +79,7 @@ def test_compress_roundtrip_exact(spark):
 
     arrays = _small_arrays(spark, 40)
     rolled = T.rollup_tiers_map(arrays)
-    restored = CMP.decompress_tiers(CMP.compress_tiers(rolled))
+    restored = CMP.decompress_tiers(CMP.rollup_compress_map(arrays))
     a = rolled.orderBy("doc_id", "tier", "bucket").collect()
     b = restored.orderBy("doc_id", "tier", "bucket").collect()
     assert len(a) == len(b) and len(a) > 0
@@ -87,23 +87,57 @@ def test_compress_roundtrip_exact(spark):
         assert ra == rb
 
 
-def test_fused_compress_equals_groupby_path(spark):
+def test_compress_roundtrip_matches_brute_force_stats(spark):
+    """decompress(rollup_compress_map(x)) equals a per-bucket NumPy
+    computation on every tier, for series lengths on each side of every
+    tier boundary (16, 960, 57 600 ticks); the empty series has no rows."""
+    import pytest
+
     from dtaianomaly_spark.rollup import compress as CMP
     from dtaianomaly_spark.rollup import tiers as T
 
-    arrays = _small_arrays(spark, 40)
-    fused = CMP.rollup_compress_map(arrays)
-    via = CMP.compress_tiers(T.rollup_tiers_map(arrays))
-    assert fused.exceptAll(via).count() == 0
-    assert via.exceptAll(fused).count() == 0
+    rng = np.random.default_rng(5)
+    lengths = (0, 1, 15, 16, 17, 959, 960, 961, 57_600, 57_601)
+    series = {
+        f"s{n}": rng.integers(-(2**20), 2**20, size=n).astype(np.int64)
+        for n in lengths
+    }
+    arrays = spark.createDataFrame(
+        [(d, x.tolist()) for d, x in series.items()],
+        "doc_id string, tokens array<int>",
+    )
+    got = {}
+    for r in CMP.decompress_tiers(CMP.rollup_compress_map(arrays)).collect():
+        got[(r["doc_id"], r["tier"], r["bucket"])] = r
+
+    want = {}
+    for d, x in series.items():
+        for tier, ticks in T.TIER_TICKS.items():
+            for k in range(-(x.shape[0] // -ticks)):
+                b = x[k * ticks : (k + 1) * ticks]
+                want[(d, tier, k)] = {
+                    "cnt": b.size, "sum": int(b.sum()),
+                    "sumsq": int((b * b).sum()), "min": int(b.min()),
+                    "max": int(b.max()), "first": int(b[0]),
+                    "last": int(b[-1]), "mean": b.sum() / b.size,
+                    "std": float(b.std()),
+                }
+    assert got.keys() == want.keys()
+    assert not any(d == "s0" for d, _, _ in got)
+    for key, exp in want.items():
+        r = got[key]
+        for f in ("cnt", "sum", "sumsq", "min", "max", "first", "last", "mean"):
+            assert r[f] == exp[f], (key, f)
+        assert r["std"] == pytest.approx(exp["std"], rel=1e-9), key
 
 
 def test_compression_beats_raw_on_long_blocks(spark):
     from dtaianomaly_spark.rollup import compress as CMP
-    from dtaianomaly_spark.rollup import tiers as T
 
-    rolled = T.rollup_tiers_map(C.token_arrays(spark, SF_DIR), tiers=("raw",))
-    rep = CMP.compression_report(CMP.compress_tiers(rolled)).collect()
+    compressed = CMP.rollup_compress_map(
+        C.token_arrays(spark, SF_DIR), tiers=("raw",)
+    )
+    rep = CMP.compression_report(compressed).collect()
     raw = {r["tier"]: r["ratio"] for r in rep}
     assert raw["raw"] > 2.0  # delta-of-delta + XOR beat 8-byte raw layout
 

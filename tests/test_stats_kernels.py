@@ -1,5 +1,6 @@
-"""Tests for the rollup-stats kernels: tumbling/bucket stats, exact tier
-composition (1m partials -> 1h equals direct aggregation), derived floats."""
+"""Tests for the rollup-stats kernels: contiguous tumbling-bucket stats,
+exact tier composition (1m partials -> 1h equals direct aggregation),
+derived floats."""
 
 import numpy as np
 import pytest
@@ -14,10 +15,15 @@ def brute_stats(v, bucket):
     }
 
 
+def tumbling(v, bucket):
+    """contiguous_stats over tumbling buckets of ``bucket`` positions."""
+    return S.contiguous_stats(v, np.arange(0, v.shape[0], bucket))
+
+
 class TestTumblingStats:
     def test_exact_small(self):
         v = np.array([1, 5, 3, 7, 8, 6, 4, 11, 2], dtype=np.int64)
-        out = S.tumbling_stats(v, 4)
+        out = tumbling(v, 4)
         assert np.array_equal(out["count"], [4, 4, 1])
         assert np.array_equal(out["sum"], [16, 29, 2])
         assert np.array_equal(out["sumsq"], [84, 237, 4])
@@ -29,7 +35,7 @@ class TestTumblingStats:
     def test_matches_brute_force(self):
         rng = np.random.default_rng(3)
         v = rng.integers(-1000, 1000, size=997).astype(np.int64)
-        out = S.tumbling_stats(v, 60)
+        out = tumbling(v, 60)
         for j in range(out["count"].shape[0]):
             b = v[j * 60 : (j + 1) * 60]
             exp = brute_stats(v, list(b))
@@ -43,28 +49,18 @@ class TestMergeStats:
         """1m -> 1h composition must equal direct aggregation over tokens."""
         rng = np.random.default_rng(11)
         v = rng.integers(-2000, 2000, size=10_000).astype(np.int64)
-        one_m = S.tumbling_stats(v, 60)
+        one_m = tumbling(v, 60)
         n_1m = one_m["count"].shape[0]
-        group = np.arange(n_1m) // 60
-        one_h = S.merge_stats(one_m, group, -(n_1m // -60))
-        direct = S.tumbling_stats(v, 3600)
+        one_h = S.merge_contiguous(one_m, np.arange(0, n_1m, 60))
+        direct = tumbling(v, 3600)
         for f in S.STAT_FIELDS:
             assert np.array_equal(one_h[f], direct[f]), f
-
-    def test_composition_with_empty_buckets(self):
-        parts = S.bucket_stats(np.array([5, 7], dtype=np.int64),
-                               np.array([0, 3], dtype=np.int64), 6)
-        merged = S.merge_stats(parts, np.array([0, 0, 0, 1, 1, 1]), 2)
-        assert np.array_equal(merged["count"], [1, 1])
-        assert np.array_equal(merged["min"], [5, 7])
-        assert np.array_equal(merged["first"], [5, 7])
-        assert np.array_equal(merged["last"], [5, 7])
 
 
 class TestDerive:
     def test_mean_std(self):
         v = np.array([1, 5, 3, 7], dtype=np.int64)
-        st = S.tumbling_stats(v, 4)
+        st = tumbling(v, 4)
         mean, std = S.derive_mean_std(st["count"], st["sum"], st["sumsq"])
         assert mean[0] == pytest.approx(v.mean())
         assert std[0] == pytest.approx(v.std())  # population

@@ -52,6 +52,44 @@ def test_incremental_rollup_resumes_from_checkpoint(spark, tmp_path):
     assert inc2.run(corpus) == 0
 
 
+def test_commit_log_fsyncs_temp_file_then_renames_then_fsyncs_dir(
+    tmp_path, monkeypatch
+):
+    """A commit record is durable: the temp file is flushed and fsynced
+    before it replaces the log, and the checkpoint directory is fsynced
+    after the rename."""
+    import stat
+
+    from dtaianomaly_spark.streaming.incremental import IncrementalRollup
+
+    inc = IncrementalRollup(str(tmp_path / "store"))
+    calls = []
+    real_fsync, real_replace = os.fsync, os.replace
+
+    def fsync(fd):
+        st = os.fstat(fd)
+        kind = "dir" if stat.S_ISDIR(st.st_mode) else "file"
+        calls.append(("fsync", kind, st.st_size if kind == "file" else None))
+        real_fsync(fd)
+
+    def replace(src, dst):
+        calls.append(("replace", os.path.basename(dst), None))
+        real_replace(src, dst)
+
+    monkeypatch.setattr(os, "fsync", fsync)
+    monkeypatch.setattr(os, "replace", replace)
+    rec = {"batch": 0, "path": "p"}
+    inc._append_commit(rec)
+
+    line = len(json.dumps(rec)) + 1
+    assert calls == [
+        ("fsync", "file", line),  # flushed: the whole record is on disk
+        ("replace", "committed.jsonl", None),
+        ("fsync", "dir", None),
+    ]
+    assert inc.snapshots() == [rec]
+
+
 def rollup_once(corpus):
     return T.rollup_tiers_map(corpus)
 
