@@ -2730,10 +2730,10 @@ def _q_compress_pla(spark, sf_dir):
 
 def _q_compress_roundtrip(spark, sf_dir):
     """compress -> decompress must reproduce the raw-tier rollup EXACTLY,
-    so the plain rollup oracle verifies the Gorilla/delta-of-delta codecs
-    end-to-end through SQL. Routed through the fused zero-shuffle
-    scan->encode path (rollup_compress_map, the production write path)
-    and the decode read path (decompress_tiers)."""
+    so the plain rollup oracle verifies the delta-of-delta codec and the
+    mean/std derivation on decode end-to-end through SQL. Routed through
+    the fused zero-shuffle scan->encode path (rollup_compress_map, the
+    production write path) and the decode read path (decompress_tiers)."""
     from dtaianomaly_spark.rollup import compress as CMP
 
     arrays = C.token_arrays(spark, sf_dir)

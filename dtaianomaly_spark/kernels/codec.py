@@ -1,14 +1,15 @@
-"""Gorilla-style compression kernels: delta-of-delta for integer streams
-(timestamps, counts) and XOR compression for float streams (per-window
-means/stds), per the Gorilla paper (Pelkonen et al., VLDB 2015).
+"""Gorilla-style compression kernels (Pelkonen et al., VLDB 2015):
+delta-of-delta for integer streams, the compressed tier's store path
+(rollup/compress.py), and XOR for float streams, which is off that path;
+its callers are tests/test_codec.py and perfbench's codec probe.
 
 Encoding maps each value to one or two (code, bit-length) pairs; the
 pairs are exploded to a flat bit vector with repeat/arange arithmetic and
 packed with ``np.packbits``. ``dod_encode`` computes its codes with NumPy
 only. ``xor_encode`` decides window reuse in a per-value Python control
 loop, then builds its codes with NumPy. Both decoders walk the prefix
-codes in Python and read the bit stream one bit at a time; they run on
-the read path and in round-trip tests.
+codes in Python, reading one bit at a time; a read past the end of the
+stream raises ``ValueError``.
 
 Wire formats
 ------------
@@ -62,6 +63,8 @@ class _BitReader:
         out = 0
         b = self.bits
         p = self.pos
+        if p + n > b.shape[0]:
+            raise ValueError(f"read of {n} bits at {p} runs past the bit stream end")
         for i in range(n):
             out = (out << 1) | int(b[p + i])
         self.pos = p + n

@@ -1,24 +1,22 @@
-"""Compressed rollup tier: Gorilla XOR + delta-of-delta columns.
+"""Compressed rollup tier: delta-of-delta blocks of the integer partials.
 
 Per-window statistics at each retention tier are stored as per-series
-compressed blocks: delta-of-delta for the integer stats (bucket ids are
-arithmetic sequences, ~1 bit/point; counts and sums are locally smooth)
-and Gorilla XOR for the derived floats, one ``BinaryType`` column per
-statistic (kernels/codec.py; Facebook Gorilla, VLDB'15 §4.1,
-reimplemented from the paper's bit layouts).
+compressed blocks, one delta-of-delta ``BinaryType`` column per exact
+int64 partial (kernels/codec.py; Facebook Gorilla, VLDB'15 §4.1,
+reimplemented from the paper's bit layouts). Nothing derivable is
+stored: ``bucket`` runs ``0 .. n_points - 1`` within a block, and
+``mean``/``std`` are derived on decode by the one shared formula.
 
 Physical shape: :func:`rollup_compress_map` is one map-only
 ``mapInArrow`` pass. It rolls each Arrow batch up with the batched
 kernel behind :func:`~dtaianomaly_spark.rollup.tiers.rollup_tiers_map`
 and encodes each (series, tier) as one row of blocks. Decompression
-(:func:`decompress_tiers`) is the exact inverse and is also a narrow
-map; the round trip is tested, so queries can be served straight from
-compressed blocks.
+(:func:`decompress_tiers`) is the exact inverse, also a ``mapInArrow``
+that builds its rows with the ingest's own batch builder; the round
+trip is tested, so queries can be served straight from compressed blocks.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -29,19 +27,18 @@ from pyspark.sql.types import (
 )
 
 from dtaianomaly_spark.kernels import codec as KC
-from dtaianomaly_spark.rollup.tiers import ROLLUP_SCHEMA, _rollup_arrow_batch
+from dtaianomaly_spark.kernels.stats import STAT_FIELDS
+from dtaianomaly_spark.rollup.tiers import (
+    ROLLUP_SCHEMA, _blocks, _rollup_arrow_batch, _tier_batch,
+)
 
-INT_COLS = ("bucket", "cnt", "sum", "sumsq", "min", "max", "first", "last")
-FLOAT_COLS = ("mean", "std")
+INT_COLS = ("cnt", "sum", "sumsq", "min", "max", "first", "last")
 
 COMPRESSED_SCHEMA = StructType(
     [StructField("doc_id", StringType(), False),
      StructField("tier", StringType(), False),
      StructField("n_points", LongType(), False)]
     + [StructField(f"{c}_enc", BinaryType(), False) for c in INT_COLS]
-    + [StructField(f"{c}_enc", BinaryType(), False) for c in FLOAT_COLS]
-    + [StructField("raw_bytes", LongType(), False),
-       StructField("enc_bytes", LongType(), False)]
 )
 
 
@@ -51,24 +48,15 @@ def _encode_tier_batch(tb):
     counting up from 0, so every ``bucket == 0`` starts a new block."""
     import pyarrow as pa
 
-    def col(name):
-        return tb.column(tb.schema.get_field_index(name))
-
-    heads = np.flatnonzero(col("bucket").to_numpy() == 0)
+    heads = np.flatnonzero(tb.column("bucket").to_numpy() == 0)
     bounds = np.append(heads, tb.num_rows)
-    n_points = np.diff(bounds)
     blocks = list(zip(bounds[:-1], bounds[1:]))
-    arrays = [col("doc_id").take(heads), col("tier").take(heads),
-              pa.array(n_points)]
-    enc_bytes = np.zeros(heads.shape[0], dtype=np.int64)
-    for cols, encode in ((INT_COLS, KC.dod_encode), (FLOAT_COLS, KC.xor_encode)):
-        for c in cols:
-            v = col(c).to_numpy()
-            enc = [encode(v[s:e]) for s, e in blocks]
-            enc_bytes += [len(b) for b in enc]
-            arrays.append(pa.array(enc, type=pa.binary()))
-    raw_bytes = n_points * 8 * (len(INT_COLS) + len(FLOAT_COLS))
-    arrays += [pa.array(raw_bytes), pa.array(enc_bytes)]
+    arrays = [tb.column("doc_id").take(heads), tb.column("tier").take(heads),
+              pa.array(np.diff(bounds))]
+    for c in INT_COLS:
+        v = tb.column(c).to_numpy()
+        arrays.append(pa.array([KC.dod_encode(v[s:e]) for s, e in blocks],
+                               type=pa.binary()))
     return pa.RecordBatch.from_arrays(arrays, names=COMPRESSED_SCHEMA.names)
 
 
@@ -90,40 +78,48 @@ def rollup_compress_map(corpus: DataFrame, tiers=("raw", "1m", "1h")) -> DataFra
     ).mapInArrow(run, COMPRESSED_SCHEMA)
 
 
+def _decode_batch(batch):
+    """Rollup rows of one batch of compressed blocks. ``bucket`` comes
+    from ``n_points``, so a block whose streams do not all hold exactly
+    ``n_points`` values raises ``ValueError`` naming (doc_id, tier)."""
+    n_points = batch.column("n_points").to_numpy()
+    streams = [[KC.dod_decode(b) for b in batch.column(f"{c}_enc").to_pylist()]
+               for c in INT_COLS]
+    lens = np.array([[s.shape[0] for s in col] for col in streams])
+    bad = np.flatnonzero((lens != n_points).any(axis=0))
+    if bad.size:
+        i = int(bad[0])
+        block = (batch.column("doc_id")[i].as_py(), batch.column("tier")[i].as_py())
+        raise ValueError(f"compressed block {block} has n_points={n_points[i]} "
+                         f"but streams of {lens[:, i].tolist()} values")
+    _, doc_idx, local = _blocks(n_points)
+    st = dict(zip(STAT_FIELDS, (np.concatenate(col) for col in streams)))
+    return _tier_batch(batch.column("doc_id"), batch.column("tier"), doc_idx, local, st)
+
+
 def decompress_tiers(compressed: DataFrame) -> DataFrame:
     """Exact inverse of :func:`rollup_compress_map`: compressed blocks
-    back to rollup rows."""
+    back to rollup rows, one Arrow batch per input batch."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        enc_cols = INT_COLS + FLOAT_COLS
-        for pdf in batches:
-            frames = []
-            for doc_id, tier, *blobs in zip(
-                pdf["doc_id"], pdf["tier"], *(pdf[f"{c}_enc"] for c in enc_cols)
-            ):
-                cols = {"doc_id": doc_id, "tier": tier}
-                for c, b in zip(enc_cols, blobs):
-                    decode = KC.dod_decode if c in INT_COLS else KC.xor_decode
-                    cols[c] = decode(bytes(b))
-                frames.append(pd.DataFrame(cols))
-            if frames:
-                yield pd.concat(frames, ignore_index=True)[
-                    list(ROLLUP_SCHEMA.names)
-                ]
+    def run(batches):
+        for batch in batches:
+            if batch.num_rows:
+                yield _decode_batch(batch)
 
-    return compressed.mapInPandas(run, ROLLUP_SCHEMA)
+    return compressed.mapInArrow(run, ROLLUP_SCHEMA)
 
 
 def compression_report(compressed: DataFrame) -> DataFrame:
-    """Per-tier compression summary (ratio from exact integer byte
-    counts with the shared float formula)."""
+    """Per-tier compression summary: ``raw_bytes`` counts 8 bytes per
+    decoded field besides doc_id and tier; ``enc_bytes`` is blob length."""
+    enc_bytes = sum(F.octet_length(f"{c}_enc").cast("long") for c in INT_COLS)
     return (
         compressed.groupBy("tier")
         .agg(
             F.count("*").alias("series"),
             F.sum("n_points").alias("points"),
-            F.sum("raw_bytes").alias("raw_bytes"),
-            F.sum("enc_bytes").alias("enc_bytes"),
+            (F.sum("n_points") * 8 * (len(ROLLUP_SCHEMA) - 2)).alias("raw_bytes"),
+            F.sum(enc_bytes).alias("enc_bytes"),
         )
         .select(
             "tier", "series", "points", "raw_bytes", "enc_bytes",

@@ -78,26 +78,29 @@ ROLLUP_SCHEMA = StructType(
 )
 
 
-def _offsets(counts: np.ndarray) -> np.ndarray:
+def _blocks(counts: np.ndarray):
+    """Blocks of ``counts[i]`` rows laid end to end: their offsets, and
+    each row's block index and position within its block."""
     off = np.zeros(counts.shape[0] + 1, dtype=np.int64)
     np.cumsum(counts, out=off[1:])
-    return off
+    local = np.arange(int(off[-1]), dtype=np.int64) - np.repeat(off[:-1], counts)
+    return off, np.repeat(np.arange(counts.shape[0]), counts), local
 
 
 def _tier_batch(
-    doc_id_arr, tier: str, doc_idx: np.ndarray, local: np.ndarray, st: dict
+    doc_id_arr, tier_arr, doc_idx: np.ndarray, local: np.ndarray, st: dict
 ):
-    """One Arrow RecordBatch for one tier. ``doc_id_arr`` is the batch's
-    pyarrow string column; take() keeps the repeat in C++ (no Python
-    strings materialize)."""
+    """``ROLLUP_SCHEMA`` rows: row ``i`` takes doc_id and tier from row
+    ``doc_idx[i]`` of the pyarrow string columns (take() keeps the repeat
+    in C++), bucket from ``local``, and mean/std derived from ``st``."""
     import pyarrow as pa
 
     mean, std = K.derive_mean_std(st["count"], st["sum"], st["sumsq"])
-    n = local.shape[0]
+    idx = pa.array(doc_idx)
     return pa.RecordBatch.from_arrays(
         [
-            doc_id_arr.take(pa.array(doc_idx)),
-            pa.array([tier]).take(pa.array(np.zeros(n, dtype=np.int32))),
+            doc_id_arr.take(idx),
+            tier_arr.take(idx),
             pa.array(local),
             pa.array(st["count"]),
             pa.array(st["sum"]),
@@ -119,14 +122,14 @@ def _rollup_arrow_batch(batch, tiers) -> list:
     every series' tokens, so per-series tumbling buckets become contiguous
     ranges and ONE exact-int64 ``reduceat`` pass per statistic covers the
     whole batch — no per-row Python loop, no pandas objects."""
-    la = batch.column(batch.schema.get_field_index("tokens"))
-    doc_id_arr = batch.column(batch.schema.get_field_index("doc_id"))
+    import pyarrow as pa
+
+    la = batch.column("tokens")
+    doc_id_arr = batch.column("doc_id")
     lens = la.value_lengths().to_numpy().astype(np.int64)
     if lens.shape[0] == 0 or lens.sum() == 0:
         return []
     if (lens == 0).any():  # defensive: drop empty series
-        import pyarrow as pa
-
         keep = np.flatnonzero(lens > 0)
         la = la.take(pa.array(keep))
         doc_id_arr = doc_id_arr.take(pa.array(keep))
@@ -137,31 +140,27 @@ def _rollup_arrow_batch(batch, tiers) -> list:
     series_start = np.cumsum(lens) - lens
     # raw tier: bucket k of series s spans series_start[s] + 16*k ...
     nb = -(lens // -RAW_BUCKET_TICKS)
-    off = _offsets(nb)
-    doc_idx = np.repeat(np.arange(n_series), nb)
-    local = np.arange(int(off[-1]), dtype=np.int64) - np.repeat(off[:-1], nb)
+    off, doc_idx, local = _blocks(nb)
     starts = np.repeat(series_start, nb) + local * RAW_BUCKET_TICKS
     st = K.contiguous_stats(values, starts)
 
     out = []
     if "raw" in tiers:
-        out.append(_tier_batch(doc_id_arr, "raw", doc_idx, local, st))
+        out.append(_tier_batch(
+            doc_id_arr, pa.repeat("raw", n_series), doc_idx, local, st))
     remaining = ("1m", "1h")
     for i, (tier, factor) in enumerate((("1m", M1_FACTOR), ("1h", H1_FACTOR))):
         if not any(t in tiers for t in remaining[i:]):
             break
         nb_up = -(nb // -factor)
-        off_up = _offsets(nb_up)
-        local_up = np.arange(int(off_up[-1]), dtype=np.int64) - np.repeat(
-            off_up[:-1], nb_up
-        )
+        off_up, doc_idx, local_up = _blocks(nb_up)
         # start index into the *lower-tier partial arrays*
         starts_up = np.repeat(off[:-1], nb_up) + local_up * factor
         st = K.merge_contiguous(st, starts_up)
         nb, off, local = nb_up, off_up, local_up
-        doc_idx = np.repeat(np.arange(n_series), nb)
         if tier in tiers:
-            out.append(_tier_batch(doc_id_arr, tier, doc_idx, local, st))
+            out.append(_tier_batch(
+                doc_id_arr, pa.repeat(tier, n_series), doc_idx, local, st))
     return out
 
 
@@ -241,16 +240,16 @@ def compose_tier(lower: DataFrame, factor: int, tier: str) -> DataFrame:
 
 
 def gap_fill(rollup: DataFrame, series_n: DataFrame, bucket_ticks: int) -> DataFrame:
-    """Left-join the expected bucket grid (0 .. ceil(n/bucket)-1 per series)
-    against observed buckets; missing buckets materialize with cnt = 0 and
-    NULL stats. ``series_n`` is (doc_id, n). The grid side is generated with
-    sequence()+explode — no data shuffle beyond the join itself, and the
-    join key (doc_id, bucket) is co-partitioned with the rollup output."""
+    """Left-join the expected bucket grid (0 .. ceil(n/bucket)-1 per series;
+    none for n = 0) against observed buckets; missing buckets materialize
+    with cnt = 0 and NULL stats. ``series_n`` is (doc_id, n). The grid side
+    is generated with sequence()+explode — no data shuffle beyond the join
+    itself, and the join key (doc_id, bucket) is co-partitioned with the
+    rollup output."""
+    last = F.ceil(F.col("n") / bucket_ticks).cast("long") - 1
     grid = series_n.select(
         "doc_id",
-        F.explode(
-            F.sequence(F.lit(0), F.ceil(F.col("n") / bucket_ticks).cast("long") - 1)
-        ).alias("bucket"),
+        F.explode(F.when(last >= 0, F.sequence(F.lit(0), last))).alias("bucket"),
     )
     return (
         grid.join(rollup, ["doc_id", "bucket"], "left")

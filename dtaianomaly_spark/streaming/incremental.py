@@ -78,8 +78,10 @@ class IncrementalRollup:
     # -- processing ---------------------------------------------------------
 
     def _batch_filter(self, corpus: DataFrame, batch: int) -> DataFrame:
+        # abs of the residue, not of the hash: abs(Long.MIN_VALUE) overflows,
+        # and the residue keeps every other series in its earlier batch
         return corpus.filter(
-            F.abs(F.xxhash64(F.col("doc_id").cast("string"))) % self.n_batches
+            F.abs(F.xxhash64(F.col("doc_id").cast("string")) % self.n_batches)
             == batch
         )
 

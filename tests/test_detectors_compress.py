@@ -139,7 +139,50 @@ def test_compression_beats_raw_on_long_blocks(spark):
     )
     rep = CMP.compression_report(compressed).collect()
     raw = {r["tier"]: r["ratio"] for r in rep}
-    assert raw["raw"] > 2.0  # delta-of-delta + XOR beat 8-byte raw layout
+    assert raw["raw"] > 2.0  # delta-of-delta beats the 8-byte raw layout
+    blobs = compressed.select(*(f"{c}_enc" for c in CMP.INT_COLS)).collect()
+    assert rep[0]["enc_bytes"] == sum(len(b) for r in blobs for b in r)
+
+
+def _one_series_blocks(spark):
+    """The three compressed blocks (raw, 1m, 1h) of one 40-tick series."""
+    from dtaianomaly_spark.rollup import compress as CMP
+
+    arrays = spark.createDataFrame(
+        [("a", list(range(40)))], "doc_id string, tokens array<int>"
+    )
+    return {r["tier"]: r.asDict() for r in CMP.rollup_compress_map(arrays).collect()}
+
+
+def test_decompress_rejects_n_points_mismatch(spark):
+    """bucket is rebuilt from n_points, so a block whose streams do not
+    hold exactly n_points values is rejected, naming (doc_id, tier)."""
+    import pytest
+
+    from dtaianomaly_spark.rollup import compress as CMP
+
+    blocks = _one_series_blocks(spark)
+    assert blocks["raw"]["n_points"] == 3
+    blocks["raw"]["n_points"] = 4
+    bad = spark.createDataFrame(list(blocks.values()), CMP.COMPRESSED_SCHEMA)
+    with pytest.raises(Exception, match=r"compressed block \('a', 'raw'\)"):
+        CMP.decompress_tiers(bad).collect()
+
+
+def test_decompress_rejects_truncated_blob(spark):
+    import pytest
+
+    from dtaianomaly_spark.kernels import codec as KC
+    from dtaianomaly_spark.rollup import compress as CMP
+
+    blocks = _one_series_blocks(spark)
+    blob = blocks["raw"]["sum_enc"]
+    with pytest.raises(ValueError, match="past the bit stream end"):
+        KC.dod_decode(blob[:6])
+    blocks["raw"]["sum_enc"] = blob[:6]
+    bad = spark.createDataFrame(list(blocks.values()), CMP.COMPRESSED_SCHEMA)
+    with pytest.raises(Exception, match="past the bit stream end"):
+        CMP.decompress_tiers(bad).collect()
 
 
 def test_sliding_znorm_dist_equals_single_ref_matrix_profile():

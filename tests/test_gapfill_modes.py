@@ -2,7 +2,7 @@
 
 from pyspark.sql import functions as F
 
-from dtaianomaly_spark.rollup.tiers import gap_fill_modes, rollup_relational
+from dtaianomaly_spark.rollup.tiers import gap_fill, gap_fill_modes, rollup_relational
 
 
 def test_gap_fill_modes_golden(spark):
@@ -51,3 +51,15 @@ def test_gap_fill_modes_edges_stay_null(spark):
     assert out[0]["locf_mean"] is None and out[0]["interp_mean"] is None
     assert out[2]["locf_mean"] == 7.0  # locf fills trailing gaps
     assert out[2]["interp_mean"] is None  # interpolate does not
+
+
+def test_gap_fill_empty_series_has_no_grid(spark):
+    # an n = 0 series has no buckets; sequence(0, -1) would count down
+    lf = spark.createDataFrame(
+        [("s", i, 7) for i in range(8)], "doc_id string, pos long, value long"
+    )
+    rolled = rollup_relational(lf, 4, "raw").drop("tier")
+    series_n = spark.createDataFrame([("s", 8), ("e", 0)], "doc_id string, n long")
+    for filled in (gap_fill(rolled, series_n, 4), gap_fill_modes(rolled, series_n, 4)):
+        got = sorted((r["doc_id"], r["bucket"]) for r in filled.collect())
+        assert got == [("s", 0), ("s", 1)]

@@ -90,6 +90,27 @@ def test_commit_log_fsyncs_temp_file_then_renames_then_fsyncs_dir(
     assert inc.snapshots() == [rec]
 
 
+def test_batch_filter_places_min_long_hash_in_one_batch(
+    spark, tmp_path, monkeypatch
+):
+    """A doc_id whose xxhash64 is Long.MIN_VALUE lands in exactly one of
+    three batches with ANSI mode on (abs(MIN_VALUE) would overflow) and
+    off (a negative residue would match no batch)."""
+    from dtaianomaly_spark.streaming.incremental import IncrementalRollup
+
+    monkeypatch.setattr(F, "xxhash64", lambda *cols: F.lit(-(2**63)))
+    inc = IncrementalRollup(str(tmp_path / "store"), n_batches=3)
+    df = spark.createDataFrame([("x",)], "doc_id string")
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for mode in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", mode)
+            hits = [inc._batch_filter(df, b).count() for b in range(3)]
+            assert sorted(hits) == [0, 0, 1], (mode, hits)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+
+
 def rollup_once(corpus):
     return T.rollup_tiers_map(corpus)
 
