@@ -80,11 +80,11 @@ def _q_rollup_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_rollup_map_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The zero-shuffle Arrow-kernel engine path (mapInPandas over per-row
-    token arrays) vs the same direct-SQL oracle: proves the engine's scale
-    path computes byte-identical rollups."""
+    """The zero-shuffle Arrow-kernel engine path (mapInArrow over per-row
+    token arrays), raw tier, vs the same direct-SQL oracle: proves the
+    engine's ingest kernel computes byte-identical rollups."""
     arrays = C.token_arrays(spark, sf_dir)
-    out = T.rollup_tiers_map(arrays, tiers=("raw",))
+    out = T.rollup_tiers_map(arrays).filter(F.col("tier") == "raw")
     return out.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         "tier", "bucket", "cnt", "sum", "sumsq", "min", "max", "first", "last",
@@ -2738,7 +2738,7 @@ def _q_compress_roundtrip(spark, sf_dir):
 
     arrays = C.token_arrays(spark, sf_dir)
     restored = CMP.decompress_tiers(
-        CMP.rollup_compress_map(arrays, tiers=("raw",))
+        CMP.rollup_compress_map(arrays).filter(F.col("tier") == "raw")
     )
     return restored.select(
         F.col("doc_id").cast("long").alias("doc_id"),

@@ -60,7 +60,7 @@ def _encode_tier_batch(tb):
     return pa.RecordBatch.from_arrays(arrays, names=COMPRESSED_SCHEMA.names)
 
 
-def rollup_compress_map(corpus: DataFrame, tiers=("raw", "1m", "1h")) -> DataFrame:
+def rollup_compress_map(corpus: DataFrame) -> DataFrame:
     """Fused rollup + compress: one Arrow pass from token arrays straight
     to compressed tier blocks, with no intermediate point rows and no
     shuffle (scan -> mapInArrow -> parquet append). The statistics come
@@ -70,7 +70,7 @@ def rollup_compress_map(corpus: DataFrame, tiers=("raw", "1m", "1h")) -> DataFra
 
     def run(batches):
         for batch in batches:
-            for tb in _rollup_arrow_batch(batch, tiers):
+            for tb in _rollup_arrow_batch(batch):
                 yield _encode_tier_batch(tb)
 
     return corpus.select(

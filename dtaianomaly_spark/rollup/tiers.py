@@ -12,11 +12,11 @@ re-aggregate without float error):
 
 Two physical strategies, same semantics:
 
-* :func:`rollup_tiers_map` — the 100-TB path. Each series is one row
-  (``tokens array<int>``), so all three tiers are computed inside one
-  Arrow ``mapInArrow`` pass: **zero shuffle**, map-only, embarrassingly
-  parallel across executors; the kernels are the exact-int64
-  ``contiguous_stats``/``merge_contiguous`` in kernels/stats.py, and
+* :func:`rollup_tiers_map` — the engine's ingest path. Each series is
+  one row (``tokens array<int>``), and one ``mapInArrow`` pass computes
+  all three tiers of every batch of rows: map-only, with no shuffle. The
+  kernels are the exact-int64 ``contiguous_stats``/``merge_contiguous``
+  in kernels/stats.py, and
   :func:`~dtaianomaly_spark.rollup.compress.rollup_compress_map` runs
   the same batched rollup before encoding.
 
@@ -53,7 +53,6 @@ RAW_BUCKET_TICKS = 16
 M1_FACTOR = 60   # raw buckets per 1m bucket
 H1_FACTOR = 60   # 1m buckets per 1h bucket
 
-TIERS = ("raw", "1m", "1h")
 TIER_TICKS = {
     "raw": RAW_BUCKET_TICKS,
     "1m": RAW_BUCKET_TICKS * M1_FACTOR,
@@ -116,12 +115,13 @@ def _tier_batch(
     )
 
 
-def _rollup_arrow_batch(batch, tiers) -> list:
-    """All-tier rollup of one Arrow batch, fully vectorized and (nearly)
-    zero-copy: the list column's flat value buffer is the concatenation of
-    every series' tokens, so per-series tumbling buckets become contiguous
-    ranges and ONE exact-int64 ``reduceat`` pass per statistic covers the
-    whole batch — no per-row Python loop, no pandas objects."""
+def _rollup_arrow_batch(batch) -> list:
+    """Raw, 1m and 1h rollup batches of one Arrow batch, fully vectorized
+    and (nearly) zero-copy: the list column's flat value buffer is the
+    concatenation of every series' tokens, so per-series tumbling buckets
+    become contiguous ranges and ONE exact-int64 ``reduceat`` pass per
+    statistic covers the whole batch — no per-row Python loop, no pandas
+    objects. An empty series has no buckets, so it yields no rows."""
     import pyarrow as pa
 
     la = batch.column("tokens")
@@ -129,11 +129,6 @@ def _rollup_arrow_batch(batch, tiers) -> list:
     lens = la.value_lengths().to_numpy().astype(np.int64)
     if lens.shape[0] == 0 or lens.sum() == 0:
         return []
-    if (lens == 0).any():  # defensive: drop empty series
-        keep = np.flatnonzero(lens > 0)
-        la = la.take(pa.array(keep))
-        doc_id_arr = doc_id_arr.take(pa.array(keep))
-        lens = lens[keep]
     values = la.flatten().to_numpy()  # zero-copy view of the flat buffer
 
     n_series = lens.shape[0]
@@ -144,35 +139,29 @@ def _rollup_arrow_batch(batch, tiers) -> list:
     starts = np.repeat(series_start, nb) + local * RAW_BUCKET_TICKS
     st = K.contiguous_stats(values, starts)
 
-    out = []
-    if "raw" in tiers:
-        out.append(_tier_batch(
-            doc_id_arr, pa.repeat("raw", n_series), doc_idx, local, st))
-    remaining = ("1m", "1h")
-    for i, (tier, factor) in enumerate((("1m", M1_FACTOR), ("1h", H1_FACTOR))):
-        if not any(t in tiers for t in remaining[i:]):
-            break
+    out = [_tier_batch(doc_id_arr, pa.repeat("raw", n_series), doc_idx, local, st)]
+    for tier, factor in (("1m", M1_FACTOR), ("1h", H1_FACTOR)):
         nb_up = -(nb // -factor)
         off_up, doc_idx, local_up = _blocks(nb_up)
         # start index into the *lower-tier partial arrays*
         starts_up = np.repeat(off[:-1], nb_up) + local_up * factor
         st = K.merge_contiguous(st, starts_up)
         nb, off, local = nb_up, off_up, local_up
-        if tier in tiers:
-            out.append(_tier_batch(
-                doc_id_arr, pa.repeat(tier, n_series), doc_idx, local, st))
+        out.append(_tier_batch(
+            doc_id_arr, pa.repeat(tier, n_series), doc_idx, local, st))
     return out
 
 
-def rollup_tiers_map(corpus: DataFrame, tiers=TIERS) -> DataFrame:
-    """Zero-shuffle all-tier rollup: one Arrow pass over per-row token
-    arrays (``mapInArrow`` — the token buffers never become Python
-    objects). Scales linearly with executors — no wide dependency
-    anywhere."""
+def rollup_tiers_map(corpus: DataFrame) -> DataFrame:
+    """Zero-shuffle raw/1m/1h rollup: one ``mapInArrow`` pass over per-row
+    token arrays (the token buffers never become Python objects). It adds
+    a projection and a ``MapInArrow`` to the corpus plan and no exchange;
+    each input Arrow batch that holds any token yields one output batch
+    per tier."""
 
     def run(batches):
         for batch in batches:
-            yield from _rollup_arrow_batch(batch, tiers)
+            yield from _rollup_arrow_batch(batch)
 
     return corpus.select(
         F.col("doc_id").cast("string").alias("doc_id"), "tokens"

@@ -1,21 +1,24 @@
 """Checkpoint-resumable incremental rollup (north rule: a killed job
 resumes from its last committed snapshot without recomputing).
 
-Model: the corpus is partitioned into deterministic **batches** (hash
-ranges of ``doc_id``). Each batch is rolled up and appended to the tier
-store as its own parquet subdirectory (`batch=<id>/` — the sandbox stand-
-in for an Iceberg snapshot commit: the directory append is atomic at the
-batch level and carries a manifest entry). After each append the batch id
-plus its lineage metrics are recorded in the checkpoint log
+Model: the corpus is partitioned into deterministic **batches** of hash
+residues: batch ``b`` holds the series with
+``abs(xxhash64(doc_id) % n_batches) == b``. Each batch is rolled up and
+written to the tier store as its own parquet subdirectory (`batch=<id>/`
+— the sandbox stand-in for an Iceberg snapshot commit). That write is
+the batch's only Spark job: an ``Observation`` on its input counts the
+batch's series and tokens as the rows pass. After the write the batch id
+plus those counts are recorded in the checkpoint log
 (``_checkpoint/committed.jsonl``, written via atomic rename). On restart,
 committed batch ids are skipped — the anti-join of work-units against the
-commit log.
+commit log — and an uncommitted batch's directory is overwritten.
 
 The same rollup kernel also runs under real Structured Streaming
 (:func:`stream_rollup`): files-source → ``mapInArrow`` rollup →
-``foreachBatch`` append with Spark's own streaming checkpoint; one code
-path, two execution modes — exactly the "continuous aggregate built as
-incremental batch" design in SURVEY.md §2.9.
+``foreachBatch`` overwrite of one directory per micro-batch, under
+Spark's own streaming checkpoint; one code path, two execution modes —
+exactly the "continuous aggregate built as incremental batch" design in
+SURVEY.md §2.9.
 """
 
 from __future__ import annotations
@@ -25,7 +28,7 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from dtaianomaly_spark.rollup.tiers import ROLLUP_SCHEMA, rollup_tiers_map
@@ -95,22 +98,19 @@ class IncrementalRollup:
             if batch in done:
                 continue
             t0 = time.perf_counter()
-            part = self._batch_filter(corpus, batch)
-            rolled = rollup_tiers_map(part)
-            out_dir = os.path.join(self.store_dir, f"batch={batch}")
-            rolled.write.mode("overwrite").parquet(out_dir)
-            ms = int(1000 * (time.perf_counter() - t0))
-            stats = (
-                part.agg(
-                    F.count("*").alias("series"), F.sum("n_tok").alias("tokens")
-                ).collect()[0]
+            obs = Observation()
+            part = self._batch_filter(corpus, batch).observe(
+                obs, F.count("*").alias("series"), F.sum("n_tok").alias("tokens")
             )
+            out_dir = os.path.join(self.store_dir, f"batch={batch}")
+            rollup_tiers_map(part).write.mode("overwrite").parquet(out_dir)
+            stats = obs.get
             self._append_commit(
                 {
                     "batch": batch,
                     "series": stats["series"],
                     "tokens": int(stats["tokens"] or 0),
-                    "wall_ms": ms,
+                    "wall_ms": int(1000 * (time.perf_counter() - t0)),
                     "path": out_dir,
                     "ts": time.time(),
                 }
@@ -194,11 +194,12 @@ def stream_rollup(
 ):
     """Structured Streaming continuous aggregate: watch ``source_dir`` for
     new corpus parquet files, roll each micro-batch up through the SAME
-    Arrow kernel, append to the tier store under Spark's streaming
-    checkpoint (exactly-once via foreachBatch + batch-id dedup is
-    delegated to Spark's commit log here). Returns the streaming query;
-    use ``trigger(availableNow=True)`` semantics — the caller awaits
-    termination."""
+    Arrow kernel, and write it under Spark's streaming checkpoint. Each
+    micro-batch overwrites its own ``data/batch_id=<id>/`` directory, so
+    a micro-batch that Spark replays after a crash between its write and
+    its checkpoint commit replaces its earlier rows instead of adding to
+    them. Returns the streaming query; it runs with
+    ``trigger(availableNow=True)`` — the caller awaits termination."""
     corpus_schema = (
         spark.read.parquet(source_dir).schema
     )
@@ -210,7 +211,8 @@ def stream_rollup(
     rolled = rollup_tiers_map(stream)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(os.path.join(store_dir, "data"))
+        out_dir = os.path.join(store_dir, "data", f"batch_id={batch_id}")
+        batch_df.write.mode("overwrite").parquet(out_dir)
 
     return (
         rolled.writeStream.foreachBatch(sink)

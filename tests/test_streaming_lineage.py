@@ -3,6 +3,8 @@
 import json
 import os
 import shutil
+import signal
+import subprocess
 import sys
 import tempfile
 
@@ -23,12 +25,21 @@ def _canon(df):
     )
 
 
+def _corpus(spark):
+    return C.token_arrays(spark, SF_DIR).select(
+        F.col("doc_id").cast("string").alias("doc_id"), "tokens", "n_tok"
+    )
+
+
+def _counts(df):
+    r = df.agg(F.count("*").alias("s"), F.sum("n_tok").alias("t")).collect()[0]
+    return r["s"], r["t"]
+
+
 def test_incremental_rollup_resumes_from_checkpoint(spark, tmp_path):
     from dtaianomaly_spark.streaming.incremental import IncrementalRollup
 
-    corpus = C.token_arrays(spark, SF_DIR).select(
-        F.col("doc_id").cast("string").alias("doc_id"), "tokens", "n_tok"
-    )
+    corpus = _corpus(spark)
     store = str(tmp_path / "store")
 
     inc = IncrementalRollup(store, n_batches=6)
@@ -41,15 +52,92 @@ def test_incremental_rollup_resumes_from_checkpoint(spark, tmp_path):
     assert inc2.run(corpus) == 4  # only the remaining batches
     committed = inc2.committed()
     assert sorted(committed) == list(range(6))
-    # lineage recorded per batch
-    for rec in committed.values():
-        assert rec["series"] > 0 and rec["tokens"] > 0 and rec["wall_ms"] >= 0
+    # each record counts exactly its batch's series and tokens
+    for b, rec in committed.items():
+        assert (rec["series"], rec["tokens"]) == _counts(inc2._batch_filter(corpus, b))
+        assert rec["wall_ms"] >= 0
+    assert (
+        sum(r["series"] for r in committed.values()),
+        sum(r["tokens"] for r in committed.values()),
+    ) == _counts(corpus)
 
     # resumed store == one-shot rollup, exactly
     assert _canon(inc2.read_store(spark)) == _canon(rollup_once(corpus))
 
     # idempotent: nothing left to do
     assert inc2.run(corpus) == 0
+
+
+def test_incremental_rollup_runs_one_spark_job_per_commit(spark, tmp_path):
+    """A commit is one Spark job: the batch's write observes its own
+    series and token counts, so no second query scans the batch."""
+    from dtaianomaly_spark.streaming.incremental import IncrementalRollup
+
+    src = str(tmp_path / "corpus")
+    _corpus(spark).write.parquet(src)
+    corpus = spark.read.parquet(src)  # a plain scan: no shuffle stage
+    inc = IncrementalRollup(str(tmp_path / "store"), n_batches=4)
+    sc = spark.sparkContext
+    group = "incremental-rollup-one-job-per-commit"
+    sc.setJobGroup(group, group)
+    try:
+        assert inc.run(corpus) == 4
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 4
+
+
+_KILL_ON_SECOND_COMMIT = """
+import os, signal, sys
+
+from dtaianomaly_spark.session import get_spark
+from dtaianomaly_spark.streaming.incremental import IncrementalRollup
+
+corpus_dir, store, n_batches = sys.argv[1], sys.argv[2], int(sys.argv[3])
+commits = []
+append_commit = IncrementalRollup._append_commit
+
+
+def kill_on_second(self, rec):
+    commits.append(rec)
+    if len(commits) == 2:  # this batch's directory is written, its record is not
+        os.kill(os.getpid(), signal.SIGKILL)
+    append_commit(self, rec)
+
+
+IncrementalRollup._append_commit = kill_on_second
+spark = get_spark(app_name="sigkill-commit", cpus=2)
+IncrementalRollup(store, n_batches).run(spark.read.parquet(corpus_dir))
+"""
+
+
+def test_sigkill_between_write_and_commit_resumes_exactly(spark, tmp_path):
+    """A process SIGKILLed after a batch's data write but before its
+    commit record leaves an orphan directory that no snapshot reads; a
+    resume rewrites that batch and logs every batch exactly once."""
+    from dtaianomaly_spark.streaming.incremental import IncrementalRollup
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    src, store = str(tmp_path / "corpus"), str(tmp_path / "store")
+    _corpus(spark).write.parquet(src)
+    env = dict(os.environ, SPARK_DRIVER_MEMORY="1g", PYTHONPATH=os.pathsep.join(
+        p for p in (repo, os.environ.get("PYTHONPATH")) if p))
+    proc = subprocess.run(
+        [sys.executable, "-c", _KILL_ON_SECOND_COMMIT, src, store, "4"],
+        cwd=repo, env=env, capture_output=True, text=True, timeout=500,
+    )
+    assert proc.returncode == -signal.SIGKILL, proc.stderr[-2000:]
+
+    inc = IncrementalRollup(store, n_batches=4)
+    assert [r["batch"] for r in inc.snapshots()] == [0]
+    assert os.path.isdir(os.path.join(store, "batch=1"))  # the orphan
+    assert not os.path.exists(os.path.join(store, "batch=2"))
+
+    corpus = spark.read.parquet(src)
+    assert inc.run(corpus) == 3
+    assert sorted(r["batch"] for r in inc.snapshots()) == [0, 1, 2, 3]
+    assert _canon(inc.read_store(spark)) == _canon(rollup_once(corpus))
 
 
 def test_commit_log_fsyncs_temp_file_then_renames_then_fsyncs_dir(
@@ -119,9 +207,7 @@ def test_structured_streaming_rollup(spark, tmp_path):
     from dtaianomaly_spark.streaming.incremental import stream_rollup
 
     src = str(tmp_path / "src")
-    corpus = C.token_arrays(spark, SF_DIR).select(
-        F.col("doc_id").cast("string").alias("doc_id"), "tokens", "n_tok"
-    )
+    corpus = _corpus(spark)
     corpus.repartition(4).write.parquet(src)
 
     store = str(tmp_path / "stream_store")
@@ -137,6 +223,28 @@ def test_structured_streaming_rollup(spark, tmp_path):
     q2.awaitTermination(120)
     got2 = spark.read.schema(T.ROLLUP_SCHEMA).parquet(os.path.join(store, "data"))
     assert got2.count() == got.count()
+
+
+def test_stream_rollup_replayed_micro_batch_writes_rows_once(spark, tmp_path):
+    """Spark replays a micro-batch whose sink write finished but whose
+    checkpoint commit did not; the replay must not add its rows twice."""
+    from dtaianomaly_spark.streaming.incremental import stream_rollup
+
+    src, store, ckpt = (str(tmp_path / d) for d in ("src", "store", "ckpt"))
+    corpus = _corpus(spark)
+    corpus.repartition(4).write.parquet(src)
+    stream_rollup(spark, src, store, ckpt).awaitTermination(120)
+
+    commit = os.path.join(ckpt, "commits", "0")
+    assert os.path.exists(commit)
+    for path in (commit, os.path.join(ckpt, "commits", ".0.crc")):
+        if os.path.exists(path):
+            os.remove(path)
+    stream_rollup(spark, src, store, ckpt).awaitTermination(120)
+    assert os.path.exists(commit)  # micro-batch 0 ran again
+
+    got = spark.read.schema(T.ROLLUP_SCHEMA).parquet(os.path.join(store, "data"))
+    assert _canon(got) == _canon(rollup_once(corpus))
 
 
 def test_partition_metrics_cover_everything(spark):
@@ -194,9 +302,7 @@ def test_snapshot_time_travel(spark, tmp_path):
     earlier snapshot's content is immutable under later appends."""
     from dtaianomaly_spark.streaming.incremental import IncrementalRollup
 
-    corpus = C.token_arrays(spark, SF_DIR).select(
-        F.col("doc_id").cast("string").alias("doc_id"), "tokens", "n_tok"
-    )
+    corpus = _corpus(spark)
     store = str(tmp_path / "store")
     inc = IncrementalRollup(store, n_batches=5)
     assert inc.run(corpus, fail_after=3) == 3
@@ -229,9 +335,7 @@ def test_compaction_preserves_content_and_history(spark, tmp_path):
 
     from dtaianomaly_spark.streaming.incremental import IncrementalRollup
 
-    corpus = C.token_arrays(spark, SF_DIR).select(
-        F.col("doc_id").cast("string").alias("doc_id"), "tokens", "n_tok"
-    )
+    corpus = _corpus(spark)
     store = str(tmp_path / "store")
     inc = IncrementalRollup(store, n_batches=5)
     inc.run(corpus)
