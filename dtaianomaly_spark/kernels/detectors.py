@@ -568,28 +568,21 @@ def mstump_profile_sum(
     return out
 
 
-def matrix_profile_ab_excl(
-    x: np.ndarray, y: np.ndarray, w: int, delta: int, excl: int
-) -> np.ndarray:
-    """AB-join profile of ``x``'s windows against ``y``'s windows with a
-    GLOBAL-coordinate exclusion zone: window i of x and window j of y are
-    trivially matched when ``|i + delta - j| <= excl`` (``delta`` = x's
-    global window offset minus y's). This is the building block of the
-    chunked distributed matrix profile (SURVEY §4.2-5): a self-join over
-    a long series decomposes into chunk-pair AB-joins whose exclusion
-    masks reconstruct the monolithic diagonal exclusion exactly.
-
-    Rows with no admissible neighbor return +inf (the combiner's min
-    ignores them)."""
-    return matrix_profile_ab_excl_both(x, y, w, delta, excl)[0]
-
-
 def matrix_profile_ab_excl_both(
     x: np.ndarray, y: np.ndarray, w: int, delta: int, excl: int
 ) -> Tuple[np.ndarray, np.ndarray]:
-    """AB-join with global exclusion returning BOTH sides' minima:
-    ``(prof_x[i] = min_j d(i, j), prof_y[j] = min_i d(i, j))``. The
-    distance matrix of an unordered chunk pair is computed once and
+    """AB-join of ``x``'s windows against ``y``'s windows with a
+    GLOBAL-coordinate exclusion zone, returning BOTH sides' minima:
+    ``(prof_x[i] = min_j d(i, j), prof_y[j] = min_i d(i, j))``. Window i
+    of x and window j of y are trivially matched when
+    ``|i + delta - j| <= excl`` (``delta`` = x's global window offset
+    minus y's). This is the building block of the chunked distributed
+    matrix profile (SURVEY §4.2-5): a self-join over a long series
+    decomposes into chunk-pair AB-joins whose exclusion masks
+    reconstruct the monolithic diagonal exclusion exactly. Windows with
+    no admissible neighbor get +inf (the combiner's min ignores them).
+
+    The distance matrix of an unordered chunk pair is computed once and
     serves both chunks — the column minima fall out of the same row
     sweep for one extra vector-min per row, halving the chunk-pair
     fan-out of the distributed matrix profile."""

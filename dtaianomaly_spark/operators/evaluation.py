@@ -1,7 +1,8 @@
 """Thresholding + evaluation-metric operators (per-series, DataFrame-only).
 
 Reference semantics (citations into /root/reference/):
-* FixedCutoff — thresholding/thresholding.py:50-74 (label = score >= c).
+* FixedCutoff — thresholding/thresholding.py:50-74 (label = score >= c),
+  one column expression inlined by ``workflow/grid._labeled``.
 * ContaminationRate — thresholding/thresholding.py:102-127: cutoff =
   np.quantile(scores, 1-rate) with linear interpolation. Implemented from
   the order-statistic DEFINITION (floor/ceil ranks + interpolation) with
@@ -55,14 +56,6 @@ def fbeta_sql(beta: float) -> str:
         f"CASE WHEN tp = 0 AND fp = 0 AND fn = 0 THEN 0.0 "
         f"ELSE (CAST({c1!r} AS DOUBLE) * tp) / "
         f"(CAST({c1!r} AS DOUBLE) * tp + fp + CAST({b2!r} AS DOUBLE) * fn) END"
-    )
-
-
-def fixed_cutoff(scored: DataFrame, cutoff: float) -> DataFrame:
-    """label = (score >= cutoff). (thresholding.py:50-74)"""
-    return scored.select(
-        "doc_id", "pos",
-        (F.col("score") >= cutoff).cast("int").alias("label"),
     )
 
 

@@ -40,12 +40,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# Shared float-derivation SQL (identical text runs in Spark and DuckDB).
-MEAN_SQL = "CAST(sum AS DOUBLE) / cnt"
-STD_SQL = (
-    "sqrt(greatest(CAST(sumsq AS DOUBLE) / cnt "
-    "- (CAST(sum AS DOUBLE) / cnt) * (CAST(sum AS DOUBLE) / cnt), 0.0))"
-)
+from dtaianomaly_spark.rollup.tiers import DERIVE_MEAN_SQL, DERIVE_STD_SQL
 
 
 def _series_int_stats(long_form: DataFrame) -> DataFrame:
@@ -64,8 +59,8 @@ def standard_scale(long_form: DataFrame, min_std: float = 1e-9) -> DataFrame:
     through unchanged. (StandardScaler.py:68-87)"""
     stats = _series_int_stats(long_form).select(
         "doc_id",
-        F.expr(MEAN_SQL).alias("mean"),
-        F.expr(STD_SQL).alias("std"),
+        F.expr(DERIVE_MEAN_SQL).alias("mean"),
+        F.expr(DERIVE_STD_SQL).alias("std"),
     )
     return (
         long_form.join(stats, "doc_id")
@@ -136,7 +131,7 @@ def moving_average(long_form: DataFrame, window_size: int) -> DataFrame:
         "pos",
         F.sum("value").over(win).alias("sum"),
         F.count("value").over(win).alias("cnt"),
-    ).select("doc_id", "pos", F.expr(MEAN_SQL).alias("out"))
+    ).select("doc_id", "pos", F.expr(DERIVE_MEAN_SQL).alias("out"))
 
 
 def differencing(long_form: DataFrame, order: int, window_size: int = 1) -> DataFrame:
@@ -222,7 +217,9 @@ def paa(long_form: DataFrame, n_frames: int) -> DataFrame:
         F.count("value").alias("cnt"),
         F.sum("value").alias("sum"),
     )
-    return agg.select("doc_id", "frame", "cnt", "sum", F.expr(MEAN_SQL).alias("out"))
+    return agg.select(
+        "doc_id", "frame", "cnt", "sum", F.expr(DERIVE_MEAN_SQL).alias("out")
+    )
 
 
 # SAX z-score -> symbol mapping for alphabet size 4 (Lin et al. 2003,
@@ -270,7 +267,9 @@ def sax_symbols(long_form: DataFrame, seg_len: int = 32) -> DataFrame:
         F.sum("value").cast("long").alias("sum"),
         F.sum(F.expr("value * value")).cast("long").alias("sumsq"),
     ).select(
-        "doc_id", F.expr(MEAN_SQL).alias("mean"), F.expr(STD_SQL).alias("std")
+        "doc_id",
+        F.expr(DERIVE_MEAN_SQL).alias("mean"),
+        F.expr(DERIVE_STD_SQL).alias("std"),
     )
     return (
         seg_agg.join(series, "doc_id")
@@ -316,7 +315,7 @@ def classical_decompose(
     ).select(
         "doc_id", "pos", "value", "phase",
         F.expr(
-            f"CASE WHEN cnt = {full} THEN {MEAN_SQL} ELSE NULL END"
+            f"CASE WHEN cnt = {full} THEN {DERIVE_MEAN_SQL} ELSE NULL END"
         ).alias("trend"),
     ).withColumn(
         "detr", F.expr("CAST(value AS DOUBLE) - trend")

@@ -15,9 +15,12 @@ Reference semantics (citations into /root/reference/):
 Physical strategy: per-window statistics are computed with array
 higher-order functions (``slice`` + ``aggregate``) directly over the
 per-row token arrays — JVM-side, whole-stage-codegen'd, ZERO shuffle; the
-window grid is generated per row with ``sequence``. The reverse mapping is
-relational: a prefix-sum over window scores plus two co-partitioned joins
-(all keyed on doc_id — one shuffle reused across the three steps).
+window grid is generated per row with ``sequence``. It stays JVM-side on
+purpose: a Python stage here (``mapInArrow`` or an Arrow UDF) drops the
+input's doc_id hash partitioning, so reverse_scores' Window would add a
+shuffle of its own. The reverse mapping is relational: a prefix-sum over
+window scores plus two co-partitioned joins (all keyed on doc_id — one
+shuffle reused across the three steps).
 """
 
 from __future__ import annotations
@@ -27,11 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-MEAN_SQL = "CAST(sum AS DOUBLE) / cnt"
-STD_SQL = (
-    "sqrt(greatest(CAST(sumsq AS DOUBLE) / cnt "
-    "- (CAST(sum AS DOUBLE) / cnt) * (CAST(sum AS DOUBLE) / cnt), 0.0))"
-)
+from dtaianomaly_spark.rollup.tiers import DERIVE_MEAN_SQL, DERIVE_STD_SQL
 
 NUM_WINDOWS_SQL = (
     "CASE WHEN n_tok <= {w} THEN CAST(1 AS BIGINT) "
@@ -46,12 +45,16 @@ def sliding_stats(arrays: DataFrame, window_size: int, stride: int) -> DataFrame
     """Per-window integer stats over every series, tail rule included.
 
     One row per (series, window); everything stays inside the row's token
-    array via HOFs — no explode of positions, no shuffle."""
+    array via HOFs — no explode of positions, no shuffle. The grid is the
+    DuckDB oracle's: a series shorter than the window has one window,
+    ``start = n - w`` (negative) and ``cnt = n``, and an empty series has
+    none."""
     w, s = window_size, stride
     nw = NUM_WINDOWS_SQL.format(w=w, s=s)
     start = START_SQL.format(w=w, s=s)
     return (
-        arrays.select(
+        arrays.filter("n_tok > 0")
+        .select(
             "doc_id", "tokens", "n_tok", F.expr(nw).alias("nw")
         )
         .select(
@@ -61,7 +64,7 @@ def sliding_stats(arrays: DataFrame, window_size: int, stride: int) -> DataFrame
         .select(
             "doc_id", "idx",
             F.expr(start).alias("start"),
-            F.expr(f"slice(tokens, {start} + 1, {w})").alias("win"),
+            F.expr(f"slice(tokens, greatest({start}, 0) + 1, {w})").alias("win"),
         )
         .select(
             "doc_id", "idx", "start",
@@ -77,8 +80,8 @@ def sliding_stats(arrays: DataFrame, window_size: int, stride: int) -> DataFrame
         )
         .select(
             "doc_id", "idx", "start", "cnt", "sum", "sumsq", "min", "max",
-            F.expr(MEAN_SQL).alias("mean"),
-            F.expr(STD_SQL).alias("std"),
+            F.expr(DERIVE_MEAN_SQL).alias("mean"),
+            F.expr(DERIVE_STD_SQL).alias("std"),
         )
     )
 

@@ -65,6 +65,55 @@ def test_sliding_stats_matches_kernel_windows(spark, series):
             assert row["mean"] == mean
 
 
+@pytest.mark.parametrize("w,s", [(64, 32), (16, 16)])
+def test_sliding_stats_short_series_follow_oracle_grid(spark, w, s):
+    """Series shorter than the window, empty ones included, in one
+    DataFrame: the DuckDB oracle's grid gives ``0 < n < w`` one
+    whole-series window (start = n - w, cnt = n) and ``n = 0`` none, and
+    reverse_scores over those windows equals the kernel's reverse map."""
+    from dtaianomaly_spark.operators import windows as OW
+    from pyspark.sql import functions as F
+
+    rng = np.random.default_rng(11)
+    series = {
+        d: rng.integers(-105, 400, n)
+        for d, n in enumerate((0, 1, 10, 63, 64, 65, 96, 100))
+    }
+    arrays = spark.createDataFrame(
+        [(d, x.tolist(), len(x)) for d, x in series.items()],
+        "doc_id long, tokens array<int>, n_tok long",
+    )
+    win = OW.sliding_stats(arrays, w, s)
+    want, want_scores = [], {}
+    for d, x in series.items():
+        n = x.shape[0]
+        starts = KW.window_starts(n, w, s) if n >= w else ([n - w] if n else [])
+        wins = [x[max(st, 0):st + w] for st in starts]
+        for i, (st, v) in enumerate(zip(starts, wins)):
+            cnt, tot, sq = v.shape[0], int(v.sum()), int((v * v).sum())
+            mean = tot / cnt
+            std = float(np.sqrt(max(sq / cnt - mean * mean, 0.0)))
+            want.append((d, i, st, cnt, tot, sq, v.min(), v.max(), mean, std))
+        if n:
+            scores = np.array([v.sum() for v in wins], dtype=np.float64)
+            want_scores[d] = KW.reverse_sliding_window(scores, w, s, n)
+    assert sorted(tuple(r) for r in win.collect()) == sorted(want)
+
+    series_n = spark.createDataFrame(
+        [(d, x.shape[0]) for d, x in series.items()], "doc_id long, n long"
+    )
+    got = {}
+    rev = OW.reverse_scores(
+        win.select("doc_id", "idx", F.col("sum").alias("score")), series_n, w, s
+    )
+    for r in rev.collect():
+        got.setdefault(r["doc_id"], {})[r["pos"]] = r["score"]
+    assert sorted(got) == sorted(want_scores)
+    for d, expect in want_scores.items():
+        out = np.array([got[d][p] for p in range(expect.shape[0])])
+        assert np.array_equal(out, expect), f"doc {d}"
+
+
 def test_reverse_scores_matches_kernel(spark, series):
     from dtaianomaly_spark.operators import windows as OW
     from pyspark.sql import functions as F

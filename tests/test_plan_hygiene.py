@@ -34,6 +34,8 @@ EXCHANGE_BOUNDS = [
     ("rel_q5_region_revenue", 1),  # all dimension joins broadcast
     ("rel_q18_volume", 1),         # one fact-side shuffle (AQE join)
     ("compress_roundtrip", 1),     # fused zero-shuffle encode path
+    ("sw_stats", 1),               # map-only HOF window stats; the
+                                   # one exchange is token_arrays
     ("sw_reverse", 2),             # running-sum window reuses the groupBy
                                    # partitioning; + the series_n join
     ("tx_curation_funnel", 6),     # 4 stage aggregates over checkpointed

@@ -448,83 +448,6 @@ def test_stateful_m4_converges_to_batch(spark, tmp_path):
     assert got == want
 
 
-def test_stateful_vocab_growth_matches_prefix_curve(spark, tmp_path):
-    """Crawl-order chunks: per-trigger sum(new_tokens) must equal the
-    batch Heaps prefix-curve increments, and the final per-bucket
-    vocabulary must equal the batch per-bucket distinct counts."""
-    from dtaianomaly_spark.pipelines import tokens as TK
-    from dtaianomaly_spark.streaming.vocab import stateful_vocab_growth
-
-    arrays = C.token_arrays(spark, SF_DIR)
-    n = arrays.count()
-    cuts = [n // 4, n // 2, n]  # three crawl-order prefix chunks
-    src = str(tmp_path / "src")
-    lo = 0
-    for hi in cuts:
-        arrays.filter(
-            (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
-        ).coalesce(1).write.mode("append").parquet(src)
-        lo = hi
-    # file order is mtime order; the writes above are sequential
-    stream = (
-        spark.readStream.schema(arrays.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    recorded = {}
-
-    def sink(batch_df, batch_id):
-        rows = batch_df.collect()
-        if rows:
-            recorded[batch_id] = {
-                r["bucket"]: (r["new_tokens"], r["bucket_vocab"])
-                for r in rows
-            }
-
-    q = (
-        stateful_vocab_growth(stream, n_buckets=16)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    # batch prefix curve at the same cuts (ladder over the same order)
-    curve = {
-        r["n_docs"]: r["vocab_size"]
-        for r in TK.vocab_growth(arrays, ladder=(1, 2, 4)).collect()
-    }
-    want_increments = []
-    prev = 0
-    for hi in cuts:
-        want_increments.append(curve[hi] - prev)
-        prev = curve[hi]
-    got_increments = [
-        sum(v[0] for v in recorded[b].values()) for b in sorted(recorded)
-    ]
-    assert got_increments == want_increments
-    # final per-bucket vocab == batch per-bucket distinct counts
-    final_bucket_vocab: dict = {}
-    for b in sorted(recorded):
-        for bk, (_, vocab) in recorded[b].items():
-            final_bucket_vocab[bk] = vocab  # monotone, last wins
-    want_buckets = {
-        r["bucket"]: r["v"]
-        for r in arrays.select(F.explode("tokens").alias("token"))
-        .select(
-            F.pmod(F.col("token").cast("long"), F.lit(16)).alias("bucket"),
-            F.col("token").cast("long").alias("token"),
-        )
-        .groupBy("bucket")
-        .agg(F.count_distinct("token").alias("v"))
-        .collect()
-    }
-    assert final_bucket_vocab == want_buckets
-    assert sum(final_bucket_vocab.values()) == curve[n]
-
-
 class _FakeState:
     """Minimal GroupState stub for driving an update fn directly."""
 
@@ -616,44 +539,6 @@ def test_stateful_m4_ttl_flush_partials_combine_to_batch():
     for pos, v in pts[1:]:
         _absorb(want, pos, v)
     assert merged == want and want[0] == 16
-
-
-def test_vocab_update_fn_dedups_within_and_across_triggers():
-    import pandas as pd
-
-    from dtaianomaly_spark.streaming.vocab import _vocab_update
-
-    st = _FakeState()
-    out1 = list(
-        _vocab_update(
-            (3,), iter([pd.DataFrame({"token": [5, 5, 9, 9, 1]})]), st
-        )
-    )[0]
-    assert (
-        int(out1["new_tokens"].iloc[0]), int(out1["bucket_vocab"].iloc[0])
-    ) == (3, 3)
-    # second trigger: one repeat + one new, split across two pdfs
-    st2 = _FakeState(value=st.updated)
-    out2 = list(
-        _vocab_update(
-            (3,),
-            iter(
-                [pd.DataFrame({"token": [9]}), pd.DataFrame({"token": [42]})]
-            ),
-            st2,
-        )
-    )[0]
-    assert (
-        int(out2["new_tokens"].iloc[0]), int(out2["bucket_vocab"].iloc[0])
-    ) == (1, 4)
-    assert sorted(st2.updated[0]) == [1, 5, 9, 42]
-    # all-repeat trigger emits a zero row and leaves state untouched
-    st3 = _FakeState(value=st2.updated)
-    out3 = list(
-        _vocab_update((3,), iter([pd.DataFrame({"token": [5, 1]})]), st3)
-    )[0]
-    assert int(out3["new_tokens"].iloc[0]) == 0
-    assert st3.updated is None  # no state write on a no-new trigger
 
 
 def test_stateful_countmin_matches_batch(spark, tmp_path):
