@@ -700,7 +700,7 @@ def _q_sw_reverse(spark, sf_dir):
     win = W.sliding_stats(arrays, SW_W, SW_S).select(
         "doc_id", "idx", F.col("sum").alias("score")
     )
-    series_n = C.documents_series(spark, sf_dir)
+    series_n = C.series_lengths(spark, sf_dir)  # broadcast: no repartition
     out = W.reverse_scores(win, series_n, SW_W, SW_S)
     return out.withColumn("pos", F.col("pos").cast("long"))
 

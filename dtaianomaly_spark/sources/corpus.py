@@ -144,8 +144,17 @@ def token_value_expr(doc_id="doc_id", pos="pos"):
     )
 
 
+def series_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, n) — the derived series length per document, unshuffled."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return docs.select(
+        F.col("doc_id").cast("long").alias("doc_id"),
+        (F.lit(64) + (F.col("n_chars") * 13) % 1985).cast("int").alias("n"),
+    )
+
+
 def documents_series(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, n) — the derived series length per document.
+    """:func:`series_lengths`, repartitioned for the work derived from it.
 
     The documents parquet is small (one file ⇒ one input split), but
     everything derived from it — sequence()+explode to ~1k positions per
@@ -154,11 +163,7 @@ def documents_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     negligible shuffle and makes every downstream stage executor-parallel;
     at 100 TB the source table has thousands of splits and this becomes a
     no-op (Spark never coalesces below input splits)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    series = docs.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        (F.lit(64) + (F.col("n_chars") * 13) % 1985).cast("int").alias("n"),
-    )
+    series = series_lengths(spark, sf_dir)
     target = spark.sparkContext.defaultParallelism * 2
     if series.rdd.getNumPartitions() < target:
         series = series.repartition(target, "doc_id")

@@ -1,17 +1,17 @@
 """Checkpoint-resumable incremental rollup (north rule: a killed job
 resumes from its last committed snapshot without recomputing).
 
-Model: the corpus is partitioned into deterministic **batches** of hash
-residues: batch ``b`` holds the series with
-``abs(xxhash64(doc_id) % n_batches) == b``. Each batch is rolled up and
-written to the tier store as its own parquet subdirectory (`batch=<id>/`
-— the sandbox stand-in for an Iceberg snapshot commit). That write is
-the batch's only Spark job: an ``Observation`` on its input counts the
-batch's series and tokens as the rows pass. After the write the batch id
-plus those counts are recorded in the checkpoint log
-(``_checkpoint/committed.jsonl``, written via atomic rename). On restart,
-committed batch ids are skipped — the anti-join of work-units against the
-commit log — and an uncommitted batch's directory is overwritten.
+Model: the corpus is partitioned into deterministic **batches**: batch
+``b`` holds the series with ``abs(xxhash64(doc_id) % n_batches) == b``
+(:func:`_residue`). A batch is one ``batch=<id>/`` parquet directory of
+the tier store (the sandbox stand-in for an Iceberg snapshot commit) and
+one record in ``_checkpoint/committed.jsonl`` (atomic rename). A run is
+ONE Spark job: one scan of every pending batch's rows, observed for its
+counts, and one write partitioned by batch that replaces only the
+pending directories (dynamic partition overwrite); then one record per
+batch is appended. A crash after the write leaves unlogged directories
+that no snapshot reads; the resume — the anti-join of work-units against
+the commit log — rewrites them and never touches a committed one.
 
 The same rollup kernel also runs under real Structured Streaming
 (:func:`stream_rollup`): files-source → ``mapInArrow`` rollup →
@@ -28,10 +28,16 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from dtaianomaly_spark.rollup.tiers import ROLLUP_SCHEMA, rollup_tiers_map
+
+
+def _residue(doc_id: Column, n_batches: int) -> Column:
+    """The batch of a series, in ``[0, n_batches)``: abs of the residue,
+    not of the hash, since abs(Long.MIN_VALUE) overflows."""
+    return F.abs(F.xxhash64(doc_id.cast("string")) % n_batches)
 
 
 class IncrementalRollup:
@@ -80,42 +86,39 @@ class IncrementalRollup:
 
     # -- processing ---------------------------------------------------------
 
-    def _batch_filter(self, corpus: DataFrame, batch: int) -> DataFrame:
-        # abs of the residue, not of the hash: abs(Long.MIN_VALUE) overflows,
-        # and the residue keeps every other series in its earlier batch
-        return corpus.filter(
-            F.abs(F.xxhash64(F.col("doc_id").cast("string")) % self.n_batches)
-            == batch
-        )
-
     def run(self, corpus: DataFrame, fail_after: int | None = None) -> int:
-        """Process all not-yet-committed batches; returns the number
-        processed. ``fail_after`` aborts after N commits (crash
-        injection for the resume tests)."""
+        """Roll up every not-yet-committed batch in one Spark job, then log
+        one record per batch in batch order; returns the number logged.
+        ``fail_after`` stops after N records (crash injection for the
+        resume tests). ``wall_ms`` is the whole job's wall time. A batch
+        with no tokens writes no directory: its ``path`` is ``None``."""
         done = self.committed()
-        processed = 0
-        for batch in range(self.n_batches):
-            if batch in done:
-                continue
-            t0 = time.perf_counter()
-            obs = Observation()
-            part = self._batch_filter(corpus, batch).observe(
-                obs, F.count("*").alias("series"), F.sum("n_tok").alias("tokens")
-            )
-            out_dir = os.path.join(self.store_dir, f"batch={batch}")
-            rollup_tiers_map(part).write.mode("overwrite").parquet(out_dir)
-            stats = obs.get
-            self._append_commit(
-                {
-                    "batch": batch,
-                    "series": stats["series"],
-                    "tokens": int(stats["tokens"] or 0),
-                    "wall_ms": int(1000 * (time.perf_counter() - t0)),
-                    "path": out_dir,
-                    "ts": time.time(),
-                }
-            )
-            processed += 1
+        pending = [b for b in range(self.n_batches) if b not in done]
+        if not pending:
+            return 0
+        t0 = time.perf_counter()
+        batch = _residue(F.col("doc_id"), self.n_batches)
+        obs = Observation()
+        part = corpus.filter(batch.isin(pending)).observe(
+            obs,
+            *(F.count_if(batch == b).alias(f"series{b}") for b in pending),
+            *(F.sum(F.when(batch == b, F.col("n_tok"))).alias(f"tokens{b}")
+              for b in pending),
+        )
+        (
+            rollup_tiers_map(part).withColumn("batch", batch)
+            .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch").parquet(self.store_dir)
+        )
+        stats = obs.get
+        wall_ms = int(1000 * (time.perf_counter() - t0))
+        for processed, b in enumerate(pending, 1):
+            tokens = int(stats[f"tokens{b}"] or 0)
+            path = os.path.join(self.store_dir, f"batch={b}") if tokens else None
+            self._append_commit({
+                "batch": b, "series": stats[f"series{b}"], "tokens": tokens,
+                "wall_ms": wall_ms, "path": path, "ts": time.time(),
+            })
             if fail_after is not None and processed >= fail_after:
                 break
         return processed
@@ -142,7 +145,7 @@ class IncrementalRollup:
         for rec in self.snapshots()[: max(0, snapshot)]:
             if rec.get("kind") == "compact":
                 paths = [rec["path"]]
-            else:
+            elif rec["path"] is not None:
                 paths.append(rec["path"])
         return paths
 

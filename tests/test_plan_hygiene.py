@@ -36,8 +36,9 @@ EXCHANGE_BOUNDS = [
     ("compress_roundtrip", 1),     # fused zero-shuffle encode path
     ("sw_stats", 1),               # map-only HOF window stats; the
                                    # one exchange is token_arrays
-    ("sw_reverse", 2),             # running-sum window reuses the groupBy
-                                   # partitioning; + the series_n join
+    ("sw_reverse", 1),             # running-sum window reuses the groupBy
+                                   # partitioning; series_n broadcasts
+                                   # straight from its scan
     ("tx_curation_funnel", 6),     # 4 stage aggregates over checkpointed
                                    # keep-sets (was 53 when the dedup
                                    # chain unrolled per stage)

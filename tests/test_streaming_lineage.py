@@ -1,5 +1,6 @@
 """Checkpoint-resume, Structured Streaming, and lineage/partitioning."""
 
+import glob
 import json
 import os
 import shutil
@@ -7,6 +8,7 @@ import signal
 import subprocess
 import sys
 import tempfile
+import uuid
 
 import numpy as np
 from pyspark.sql import functions as F
@@ -15,6 +17,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dtaianomaly_spark.sources import corpus as C
 from dtaianomaly_spark.rollup import tiers as T
+from dtaianomaly_spark.streaming.incremental import _residue
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -54,7 +57,8 @@ def test_incremental_rollup_resumes_from_checkpoint(spark, tmp_path):
     assert sorted(committed) == list(range(6))
     # each record counts exactly its batch's series and tokens
     for b, rec in committed.items():
-        assert (rec["series"], rec["tokens"]) == _counts(inc2._batch_filter(corpus, b))
+        part = corpus.filter(_residue(F.col("doc_id"), 6) == b)
+        assert (rec["series"], rec["tokens"]) == _counts(part)
         assert rec["wall_ms"] >= 0
     assert (
         sum(r["series"] for r in committed.values()),
@@ -68,24 +72,36 @@ def test_incremental_rollup_resumes_from_checkpoint(spark, tmp_path):
     assert inc2.run(corpus) == 0
 
 
-def test_incremental_rollup_runs_one_spark_job_per_commit(spark, tmp_path):
-    """A commit is one Spark job: the batch's write observes its own
-    series and token counts, so no second query scans the batch."""
+def _jobs_of(spark, fn):
+    """(fn's result, number of Spark jobs fn ran)."""
+    sc = spark.sparkContext
+    group = f"incremental-rollup-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_incremental_rollup_runs_one_spark_job_per_run(spark, tmp_path):
+    """A run is one Spark job however many batches are pending: one scan
+    and one partitioned write cover them all, and the write observes
+    every batch's series and token counts, so no second query runs."""
     from dtaianomaly_spark.streaming.incremental import IncrementalRollup
 
     src = str(tmp_path / "corpus")
     _corpus(spark).write.parquet(src)
     corpus = spark.read.parquet(src)  # a plain scan: no shuffle stage
     inc = IncrementalRollup(str(tmp_path / "store"), n_batches=4)
-    sc = spark.sparkContext
-    group = "incremental-rollup-one-job-per-commit"
-    sc.setJobGroup(group, group)
-    try:
-        assert inc.run(corpus) == 4
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 4
+    assert _jobs_of(spark, lambda: inc.run(corpus)) == (4, 1)
+    assert [r["batch"] for r in inc.snapshots()] == [0, 1, 2, 3]
+
+    resumed = IncrementalRollup(str(tmp_path / "resumed"), n_batches=4)
+    assert resumed.run(corpus, fail_after=2) == 2
+    assert _jobs_of(spark, lambda: resumed.run(corpus)) == (2, 1)
+    assert [r["batch"] for r in resumed.snapshots()] == [0, 1, 2, 3]
 
 
 _KILL_ON_SECOND_COMMIT = """
@@ -101,7 +117,7 @@ append_commit = IncrementalRollup._append_commit
 
 def kill_on_second(self, rec):
     commits.append(rec)
-    if len(commits) == 2:  # this batch's directory is written, its record is not
+    if len(commits) == 2:  # every batch's directory is written, one record is
         os.kill(os.getpid(), signal.SIGKILL)
     append_commit(self, rec)
 
@@ -113,9 +129,11 @@ IncrementalRollup(store, n_batches).run(spark.read.parquet(corpus_dir))
 
 
 def test_sigkill_between_write_and_commit_resumes_exactly(spark, tmp_path):
-    """A process SIGKILLed after a batch's data write but before its
-    commit record leaves an orphan directory that no snapshot reads; a
-    resume rewrites that batch and logs every batch exactly once."""
+    """A process SIGKILLed after the run's data write but before its
+    second commit record leaves the unlogged batches' directories as
+    orphans that no snapshot reads; a resume rewrites exactly those,
+    leaves the committed directory's files untouched, and logs every
+    batch exactly once."""
     from dtaianomaly_spark.streaming.incremental import IncrementalRollup
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -131,12 +149,20 @@ def test_sigkill_between_write_and_commit_resumes_exactly(spark, tmp_path):
 
     inc = IncrementalRollup(store, n_batches=4)
     assert [r["batch"] for r in inc.snapshots()] == [0]
-    assert os.path.isdir(os.path.join(store, "batch=1"))  # the orphan
-    assert not os.path.exists(os.path.join(store, "batch=2"))
+    for b in (1, 2, 3):  # the orphans: written by the one job, not logged
+        assert os.listdir(os.path.join(store, f"batch={b}"))
+    committed_dir = os.path.join(store, "batch=0")
+
+    def files_of(d):
+        return {f: os.stat(os.path.join(d, f)).st_mtime_ns for f in os.listdir(d)}
+
+    before = files_of(committed_dir)
+    assert before
 
     corpus = spark.read.parquet(src)
     assert inc.run(corpus) == 3
-    assert sorted(r["batch"] for r in inc.snapshots()) == [0, 1, 2, 3]
+    assert [r["batch"] for r in inc.snapshots()] == [0, 1, 2, 3]
+    assert files_of(committed_dir) == before  # same names, same mtimes
     assert _canon(inc.read_store(spark)) == _canon(rollup_once(corpus))
 
 
@@ -183,20 +209,64 @@ def test_batch_filter_places_min_long_hash_in_one_batch(
 ):
     """A doc_id whose xxhash64 is Long.MIN_VALUE lands in exactly one of
     three batches with ANSI mode on (abs(MIN_VALUE) would overflow) and
-    off (a negative residue would match no batch)."""
+    off (a negative residue would match no batch): both as a residue
+    and through a run, where one batch directory holds its points and
+    that batch's record counts it."""
     from dtaianomaly_spark.streaming.incremental import IncrementalRollup
 
     monkeypatch.setattr(F, "xxhash64", lambda *cols: F.lit(-(2**63)))
-    inc = IncrementalRollup(str(tmp_path / "store"), n_batches=3)
-    df = spark.createDataFrame([("x",)], "doc_id string")
+    df = spark.createDataFrame(
+        [("x", [1, 2, 3], 3)], "doc_id string, tokens array<int>, n_tok int"
+    )
     ansi = spark.conf.get("spark.sql.ansi.enabled")
     try:
         for mode in ("true", "false"):
             spark.conf.set("spark.sql.ansi.enabled", mode)
-            hits = [inc._batch_filter(df, b).count() for b in range(3)]
+            hits = [df.filter(_residue(F.col("doc_id"), 3) == b).count()
+                    for b in range(3)]
             assert sorted(hits) == [0, 0, 1], (mode, hits)
+
+            store = str(tmp_path / f"store-ansi-{mode}")
+            inc = IncrementalRollup(store, n_batches=3)
+            assert inc.run(df) == 3
+            (b,) = [b for b in range(3) if hits[b]]
+            assert sorted(glob.glob(os.path.join(store, "batch=*"))) == [
+                os.path.join(store, f"batch={b}")
+            ]
+            assert {r["batch"]: r["series"] for r in inc.snapshots()} == {
+                i: int(i == b) for i in range(3)
+            }
+            assert _canon(inc.read_store(spark)) == _canon(rollup_once(df))
     finally:
         spark.conf.set("spark.sql.ansi.enabled", ansi)
+
+
+def test_empty_batches_stay_readable(spark, tmp_path):
+    """With more batches than series most batches are empty. Each is
+    still committed with zero counts, and every snapshot, the full
+    store and its compaction read back the one-shot rollup's rows."""
+    from dtaianomaly_spark.streaming.incremental import IncrementalRollup
+
+    six = _corpus(spark).orderBy("doc_id").limit(6)
+    corpus = spark.createDataFrame(six.collect(), six.schema)
+    inc = IncrementalRollup(str(tmp_path / "store"), n_batches=20)
+    assert inc.run(corpus) == 20
+
+    recs = inc.snapshots()
+    assert sorted(r["batch"] for r in recs) == list(range(20))
+    empty = [r for r in recs if r["series"] == 0]
+    assert empty and all(r["tokens"] == 0 for r in empty)
+    full = _canon(rollup_once(corpus))
+    assert _canon(inc.read_store(spark)) == full
+
+    doc = T.ROLLUP_SCHEMA.names.index("doc_id")
+    for k in range(len(recs) + 1):
+        rows = _canon(inc.read_as_of(spark, k))
+        assert set(rows) <= set(full)
+        assert len({r[doc] for r in rows}) == sum(r["series"] for r in recs[:k])
+
+    inc.compact(spark, target_files=1)
+    assert _canon(inc.read_store(spark)) == full
 
 
 def rollup_once(corpus):
@@ -331,8 +401,6 @@ def test_compaction_preserves_content_and_history(spark, tmp_path):
     """compact() rewrites the live set into few files, content-equal;
     pre-compaction snapshots still time-travel; resume logic ignores
     the compact record."""
-    import glob
-
     from dtaianomaly_spark.streaming.incremental import IncrementalRollup
 
     corpus = _corpus(spark)
