@@ -1013,7 +1013,7 @@ def _q_rollup_retention(spark, sf_dir):
     m1 = T.compose_tier(raw, 60, "1m")
     h1 = T.compose_tier(m1, 60, "1h")
     tiered = raw.unionByName(m1).unionByName(h1)
-    return T.apply_retention(tiered, C.documents_series(spark, sf_dir))
+    return T.apply_retention(tiered, C.series_lengths(spark, sf_dir))
 
 
 def _q_rel_q1(spark, sf_dir):

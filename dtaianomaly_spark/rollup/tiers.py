@@ -257,10 +257,7 @@ def gap_fill(rollup: DataFrame, series_n: DataFrame, bucket_ticks: int) -> DataF
 RETENTION_TICKS = {"raw": 512, "1m": 16384, "1h": None}
 
 
-def apply_retention(
-    tiered: DataFrame, series_n: DataFrame,
-    horizons: dict = RETENTION_TICKS, tier_ticks: dict = None,
-) -> DataFrame:
+def apply_retention(tiered: DataFrame, series_n: DataFrame) -> DataFrame:
     """Tiered retention policy — the third leg of rollup/downsample/
     RETENTION (the continuous-aggregate pattern: raw data ages out
     first, each coarser tier lives longer, the coarsest is kept
@@ -268,7 +265,7 @@ def apply_retention(
     measured from the series head (``n``, the series' newest tick), is
     within the tier's horizon:
 
-        n - (bucket + 1) * ticks[tier] < horizon[tier]
+        n - (bucket + 1) * TIER_TICKS[tier] < RETENTION_TICKS[tier]
 
     ``tiered`` is the union-of-tiers shape (doc_id, tier, bucket, ...);
     ``series_n`` is (doc_id, n). Pure relational row filter applied
@@ -276,13 +273,11 @@ def apply_retention(
     disk, and no code deletes files or bucket ranges from a store. On a
     store partitioned by bucket, this predicate is also the condition
     under which a whole partition could be dropped."""
-    if tier_ticks is None:
-        tier_ticks = TIER_TICKS
     cases = " ".join(
         f"WHEN tier = '{t}' THEN "
-        + ("TRUE" if horizons.get(t) is None else
-           f"n - (bucket + 1) * {tier_ticks[t]} < {int(horizons[t])}")
-        for t in tier_ticks
+        + ("TRUE" if RETENTION_TICKS[t] is None else
+           f"n - (bucket + 1) * {ticks} < {RETENTION_TICKS[t]}")
+        for t, ticks in TIER_TICKS.items()
     )
     return (
         tiered.join(series_n.select("doc_id", "n"), "doc_id")

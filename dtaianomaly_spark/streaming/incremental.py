@@ -91,8 +91,21 @@ class IncrementalRollup:
         one record per batch in batch order; returns the number logged.
         ``fail_after`` stops after N records (crash injection for the
         resume tests). ``wall_ms`` is the whole job's wall time. A batch
-        with no tokens writes no directory: its ``path`` is ``None``."""
+        with no tokens writes no directory: its ``path`` is ``None``.
+
+        Each record stores ``n_batches``. A log holding a batch record
+        with another value raises ``ValueError`` before anything is
+        written: its batch ids name other series, so resuming would
+        duplicate or drop them. Records without the key predate it and
+        are accepted."""
         done = self.committed()
+        other = {r.get("n_batches", self.n_batches) for r in done.values()}
+        other.discard(self.n_batches)
+        if other:
+            raise ValueError(
+                f"{self.log_path} was written with n_batches={sorted(other)},"
+                f" not {self.n_batches}"
+            )
         pending = [b for b in range(self.n_batches) if b not in done]
         if not pending:
             return 0
@@ -116,7 +129,8 @@ class IncrementalRollup:
             tokens = int(stats[f"tokens{b}"] or 0)
             path = os.path.join(self.store_dir, f"batch={b}") if tokens else None
             self._append_commit({
-                "batch": b, "series": stats[f"series{b}"], "tokens": tokens,
+                "batch": b, "n_batches": self.n_batches,
+                "series": stats[f"series{b}"], "tokens": tokens,
                 "wall_ms": wall_ms, "path": path, "ts": time.time(),
             })
             if fail_after is not None and processed >= fail_after:

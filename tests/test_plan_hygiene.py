@@ -39,6 +39,8 @@ EXCHANGE_BOUNDS = [
     ("sw_reverse", 1),             # running-sum window reuses the groupBy
                                    # partitioning; series_n broadcasts
                                    # straight from its scan
+    ("rollup_retention", 3),       # one per tier branch of the union;
+                                   # series_n broadcasts from its scan
     ("tx_curation_funnel", 6),     # 4 stage aggregates over checkpointed
                                    # keep-sets (was 53 when the dedup
                                    # chain unrolled per stage)

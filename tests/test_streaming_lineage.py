@@ -11,6 +11,7 @@ import tempfile
 import uuid
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -267,6 +268,41 @@ def test_empty_batches_stay_readable(spark, tmp_path):
 
     inc.compact(spark, target_files=1)
     assert _canon(inc.read_store(spark)) == full
+
+
+def _store_state(store):
+    """Every file under ``store`` with its size and mtime, and the log."""
+    files = sorted(
+        (os.path.relpath(p, store), os.stat(p).st_size, os.stat(p).st_mtime_ns)
+        for p in glob.glob(os.path.join(store, "**"), recursive=True)
+        if os.path.isfile(p)
+    )
+    with open(os.path.join(store, "_checkpoint", "committed.jsonl")) as f:
+        return files, f.read()
+
+
+@pytest.mark.parametrize(
+    "first,fail_after,second", [(4, None, 8), (8, 3, 4)],
+    ids=["complete-4-then-8", "partial-8-then-4"],
+)
+def test_resume_with_other_n_batches_is_refused(
+    spark, tmp_path, first, fail_after, second
+):
+    """Batch ids only name the same series under the same ``n_batches``.
+    Resuming a log with another value would duplicate series (4 then 8)
+    or drop them (8 cut short, then 4), so ``run`` refuses before it
+    writes anything."""
+    from dtaianomaly_spark.streaming.incremental import IncrementalRollup
+
+    twelve = _corpus(spark).orderBy("doc_id").limit(12)
+    corpus = spark.createDataFrame(twelve.collect(), twelve.schema)
+    store = str(tmp_path / "store")
+    IncrementalRollup(store, first).run(corpus, fail_after=fail_after)
+    before = _store_state(store)
+
+    with pytest.raises(ValueError, match=f"n_batches=\\[{first}\\]"):
+        IncrementalRollup(store, second).run(corpus)
+    assert _store_state(store) == before
 
 
 def rollup_once(corpus):
