@@ -2574,7 +2574,7 @@ def _q_det_matrix_profile_mv(spark, sf_dir):
     a naive sort-and-average oracle in tests/test_matrix_profile_params.py."""
     from dtaianomaly_spark.operators import detectors as DET
 
-    return DET.matrix_profile_scores_mv(C.token_arrays_mv(spark, sf_dir), 32)
+    return DET.matrix_profile_scores(C.token_arrays_mv(spark, sf_dir), 32)
 
 
 def _q_det_mp_mv_dist(spark, sf_dir):
@@ -2711,21 +2711,6 @@ def _q_det_exceed_median(spark, sf_dir):
     from dtaianomaly_spark.operators import detectors as DET
 
     return DET.exceed_confidence_scores(_arrays_long_docid(spark, sf_dir))
-
-
-def _q_compress_pla(spark, sf_dir):
-    """Swing-filter piecewise-linear compression report (Elmeleegy et
-    al., VLDB 2009): the LOSSY leg next to the exact Gorilla blocks —
-    per series, connected PLA segments under a hard |recon - x| <= 4
-    error bound, with encode + decode + audit fused in ONE Arrow map
-    (max_err and points-per-knot ratio visible in every row; nothing
-    but the bounded report crosses the wire). Rows-only; the kernel is
-    pinned against an independent per-origin maximal-extension twin,
-    the error bound, knot sharing and eps=0 exactness in pytest
-    (test_codec.py)."""
-    from dtaianomaly_spark.rollup.compress import pla_report_map
-
-    return pla_report_map(C.token_arrays(spark, sf_dir), eps=4.0)
 
 
 def _q_compress_roundtrip(spark, sf_dir):
@@ -3008,7 +2993,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ev_anomaly_spans": _q_ev_anomaly_spans,
         "det_exceed_median": _q_det_exceed_median,
         "compress_roundtrip": _q_compress_roundtrip,
-        "compress_pla": _q_compress_pla,
         "compress_report": _q_compress_report,
         "det_knn": _q_det_knn,
         "det_lof": _q_det_lof,

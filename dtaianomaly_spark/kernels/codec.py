@@ -8,8 +8,11 @@ pairs are exploded to a flat bit vector with repeat/arange arithmetic and
 packed with ``np.packbits``. ``dod_encode`` computes its codes with NumPy
 only. ``xor_encode`` decides window reuse in a per-value Python control
 loop, then builds its codes with NumPy. Both decoders walk the prefix
-codes in Python, reading one bit at a time; a read past the end of the
-stream raises ``ValueError``.
+codes in Python, reading one bit at a time; a blob shorter than the
+4-byte header, or a read past the end of the stream, raises ``ValueError``.
+``dod_decode`` rebuilds the values with two int64 ``np.cumsum`` passes,
+which wrap at 64 bits as the encoder's ``np.diff`` does, so every int64
+stream round-trips, full-range jumps included.
 
 Wire formats
 ------------
@@ -125,18 +128,26 @@ def dod_encode(values: np.ndarray) -> bytes:
     return header + _pack_bits(np.concatenate(codes), np.concatenate(lens))
 
 
+def _read_header(data: bytes) -> tuple[int, _BitReader]:
+    """The value count of a blob and a reader over its bit stream."""
+    if len(data) < 4:
+        raise ValueError(
+            f"blob of {len(data)} bytes is shorter than its 4-byte header")
+    return int(np.frombuffer(data[:4], dtype=np.uint32)[0]), _BitReader(data[4:])
+
+
+_U64 = (1 << 64) - 1
+
+
 def dod_decode(data: bytes) -> np.ndarray:
-    n = int(np.frombuffer(data[:4], dtype=np.uint32)[0])
-    out = np.empty(n, dtype=np.int64)
+    n, r = _read_header(data)
     if n == 0:
-        return out
-    r = _BitReader(data[4:])
-    out[0] = np.uint64(r.read(64)).astype(np.int64)
-    if n == 1:
-        return out
-    delta = int(np.uint64(r.read(64)).astype(np.int64))
-    out[1] = out[0] + delta
-    for i in range(2, n):
+        return np.empty(0, dtype=np.int64)
+    # v0, delta0, then each delta-of-delta, as 64-bit two's complement
+    parts = [r.read(64)]
+    if n >= 2:
+        parts.append(r.read(64))
+    for _ in range(2, n):
         if r.read(1) == 0:
             dod = 0
         elif r.read(1) == 0:
@@ -146,10 +157,11 @@ def dod_decode(data: bytes) -> np.ndarray:
         elif r.read(1) == 0:
             dod = r.read(12) - 2047
         else:
-            dod = int(np.uint64(r.read(64)).astype(np.int64))
-        delta += dod
-        out[i] = out[i - 1] + delta
-    return out
+            dod = r.read(64)
+        parts.append(dod & _U64)
+    out = np.array(parts, dtype=np.uint64).view(np.int64)
+    out[1:] = np.cumsum(out[1:])  # deltas
+    return np.cumsum(out)
 
 
 def _clz64(x: np.ndarray) -> np.ndarray:
@@ -245,11 +257,10 @@ def xor_encode(values: np.ndarray) -> bytes:
 
 
 def xor_decode(data: bytes) -> np.ndarray:
-    n = int(np.frombuffer(data[:4], dtype=np.uint32)[0])
+    n, r = _read_header(data)
     out = np.empty(n, dtype=np.uint64)
     if n == 0:
         return out.view(np.float64)
-    r = _BitReader(data[4:])
     out[0] = np.uint64(r.read(64))
     lead, mlen = 0, 0
     for i in range(1, n):
@@ -263,75 +274,3 @@ def xor_decode(data: bytes) -> np.ndarray:
         x = np.uint64(meaningful) << np.uint64(64 - lead - mlen)
         out[i] = out[i - 1] ^ x
     return out.view(np.float64)
-
-
-# --------------------------------------------- Swing-filter PLA (lossy)
-
-def swing_encode(values: np.ndarray, eps: float) -> np.ndarray:
-    """Swing filter piecewise-linear approximation (Elmeleegy et al.,
-    VLDB 2009, "Online piece-wise linear approximation of numerical
-    streams with precision guarantees"): greedily extend CONNECTED
-    segments while a slope corridor from the segment origin can still
-    pass within ``eps`` of every point; when point ``i`` falls outside
-    the corridor, close the segment at ``i - 1`` (end value = corridor
-    midpoint there) and restart from that point. The lossy companion
-    to the exact Gorilla codecs: O(1) state per open segment, one
-    sequential pass — the same shape the streaming twins keep.
-
-    Returns segments as an (m, 4) float64 array of rows
-    ``(t_start, t_end, y_start, y_end)`` with integer tick positions;
-    reconstruction (:func:`swing_decode`) linearly interpolates each
-    segment, and ``|recon - x| <= eps`` everywhere BY CONSTRUCTION
-    (the returned slope is inside the final corridor). Segment ends
-    are shared: segment k+1 starts at segment k's (t_end, y_end) tick
-    (the connected-PLA contract), so m segments cost ~m+1 knots."""
-    x = np.asarray(values, dtype=np.float64)
-    n = x.shape[0]
-    if eps < 0 or not np.isfinite(eps):
-        raise ValueError(f"eps must be finite and >= 0, got {eps}")
-    if n == 0:
-        return np.empty((0, 4))
-    if n == 1:
-        return np.array([[0.0, 0.0, x[0], x[0]]])
-    segs = []
-    t0, y0 = 0, x[0]
-    lo, hi = -np.inf, np.inf  # feasible slope corridor from (t0, y0)
-    last_mid = x[0]
-    for i in range(1, n):
-        dt = i - t0
-        s_lo = (x[i] - eps - y0) / dt
-        s_hi = (x[i] + eps - y0) / dt
-        if max(lo, s_lo) <= min(hi, s_hi):
-            lo, hi = max(lo, s_lo), min(hi, s_hi)
-            last_mid = y0 + 0.5 * (lo + hi) * dt
-        else:
-            # close at i-1 with the midpoint slope, restart from there
-            y_end = y0 + 0.5 * (lo + hi) * (i - 1 - t0)
-            segs.append((float(t0), float(i - 1), y0, y_end))
-            t0, y0 = i - 1, y_end
-            s_lo = (x[i] - eps - y0) / (i - t0)
-            s_hi = (x[i] + eps - y0) / (i - t0)
-            if s_lo > s_hi:  # pragma: no cover — eps >= 0 makes this
-                s_lo = s_hi  # unreachable from a fresh origin
-            lo, hi = s_lo, s_hi
-            last_mid = y0 + 0.5 * (lo + hi) * (i - t0)
-    segs.append((float(t0), float(n - 1), y0, last_mid))
-    return np.asarray(segs, dtype=np.float64)
-
-
-def swing_decode(segs: np.ndarray, n: int) -> np.ndarray:
-    """Reconstruct the length-``n`` series from :func:`swing_encode`
-    segments by per-segment linear interpolation (the shared knot makes
-    boundaries unambiguous: each segment owns [t_start, t_end))."""
-    segs = np.asarray(segs, dtype=np.float64)
-    out = np.empty(n, dtype=np.float64)
-    if n == 0:
-        return out
-    for t0, t1, v0, v1 in segs:
-        t0i, t1i = int(t0), int(t1)
-        if t1i > t0i:
-            t = np.arange(t0i, t1i + 1, dtype=np.float64)
-            out[t0i:t1i + 1] = v0 + (v1 - v0) * (t - t0) / (t1 - t0)
-        else:
-            out[t0i] = v1
-    return out

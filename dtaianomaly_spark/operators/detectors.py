@@ -158,30 +158,6 @@ def matrix_profile_scores(
     return _score_map(arrays, per_series)
 
 
-def matrix_profile_scores_mv(
-    arrays_mv: DataFrame, window_size: int,
-    normalize: bool = True, p: float = 2.0,
-) -> DataFrame:
-    """Multivariate matrix-profile scores, mstump-faithful: per window
-    pair the d per-attribute z-normalized distances are sorted descending
-    (discords=True), cumulatively averaged into the k-dimensional
-    distances, min-reduced over admissible neighbors per k, and the k-dim
-    profiles SUMMED — exactly
-    ``np.sum(stumpy.mstump(X.T, m, discords=True)[0], axis=0)``
-    (MatrixProfileDetector.py:169-176), then the stride-1 reverse window
-    map.
-
-    Input: (doc_id, tokens array<array<int>> time-major (n, d), n_tok).
-    One Arrow pass per series — d parallel STOMP recurrences, no shuffle."""
-    w = window_size
-
-    def per_series(x: np.ndarray) -> np.ndarray:
-        prof = KD.mstump_profile_sum(x, w, discords=True, normalize=normalize, p=p)
-        return KW.reverse_sliding_window(prof, w, 1, x.shape[0])
-
-    return _score_map(arrays_mv, per_series)
-
-
 def matrix_profile_novelty_scores(
     arrays: DataFrame, reference: dict, window_size,
     normalize: bool = True, p: float = 2.0, k: int = 1,

@@ -19,11 +19,10 @@ trip is tested, so queries can be served straight from compressed blocks.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType, DoubleType, LongType, StringType, StructField, StructType,
+    BinaryType, LongType, StringType, StructField, StructType,
 )
 
 from dtaianomaly_spark.kernels import codec as KC
@@ -126,86 +125,3 @@ def compression_report(compressed: DataFrame) -> DataFrame:
             F.expr("CAST(raw_bytes AS DOUBLE) / enc_bytes").alias("ratio"),
         )
     )
-
-
-# --------------------------------------------- Swing-filter PLA (lossy)
-
-PLA_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType(), False),
-        StructField("n", LongType(), False),
-        StructField("n_segments", LongType(), False),
-        StructField("knots", LongType(), False),
-        StructField("ratio", DoubleType(), False),
-        StructField("max_err", DoubleType(), False),
-    ]
-)
-
-PLA_SEG_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType(), False),
-        StructField("seg", LongType(), False),
-        StructField("t_start", LongType(), False),
-        StructField("t_end", LongType(), False),
-        StructField("y_start", DoubleType(), False),
-        StructField("y_end", DoubleType(), False),
-    ]
-)
-
-
-def pla_segments_map(corpus: DataFrame, eps: float) -> DataFrame:
-    """Per-series Swing-filter PLA segments (kernels/codec.swing_encode;
-    Elmeleegy et al., VLDB 2009): the LOSSY compression leg next to the
-    exact Gorilla blocks — raw token streams become connected linear
-    segments with a hard ``|recon - x| <= eps`` guarantee, the form a
-    dashboard or a downsampled retention tier can serve directly.
-    Map-only Arrow stage, no shuffle; output one row per segment."""
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, tokens in zip(pdf["doc_id"], pdf["tokens"]):
-                segs = KC.swing_encode(
-                    np.asarray(tokens, dtype=np.float64), eps
-                )
-                rows.extend(
-                    (str(doc_id), i, int(s[0]), int(s[1]), s[2], s[3])
-                    for i, s in enumerate(segs)
-                )
-            yield pd.DataFrame(rows, columns=PLA_SEG_SCHEMA.names)
-
-    return corpus.select(
-        F.col("doc_id").cast("string").alias("doc_id"), "tokens"
-    ).mapInPandas(run, PLA_SEG_SCHEMA)
-
-
-def pla_report_map(corpus: DataFrame, eps: float) -> DataFrame:
-    """Per-series PLA compression report: encode, DECODE, and verify in
-    one Arrow pass — ``max_err`` is the actual reconstruction error
-    (guaranteed <= eps, and visible in every row), ``ratio`` the
-    points-per-knot compression (n / (n_segments + 1): connected
-    segments share knots). The fused encode+verify keeps the audit on
-    the executors — nothing but the bounded report crosses the wire."""
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, tokens in zip(pdf["doc_id"], pdf["tokens"]):
-                x = np.asarray(tokens, dtype=np.float64)
-                segs = KC.swing_encode(x, eps)
-                rec = KC.swing_decode(segs, x.shape[0])
-                err = float(np.abs(rec - x).max()) if x.shape[0] else 0.0
-                m = segs.shape[0]
-                # connected segments share endpoints: m + 1 knots, except
-                # the degenerate single-point segment (one knot) and the
-                # empty series (none)
-                knots = 0 if m == 0 else (1 if x.shape[0] == 1 else m + 1)
-                rows.append(
-                    (str(doc_id), x.shape[0], m, knots,
-                     x.shape[0] / knots if knots else 0.0, err)
-                )
-            yield pd.DataFrame(rows, columns=PLA_SCHEMA.names)
-
-    return corpus.select(
-        F.col("doc_id").cast("string").alias("doc_id"), "tokens"
-    ).mapInPandas(run, PLA_SCHEMA)

@@ -121,12 +121,13 @@ def _rollup_arrow_batch(batch) -> list:
     concatenation of every series' tokens, so per-series tumbling buckets
     become contiguous ranges and ONE exact-int64 ``reduceat`` pass per
     statistic covers the whole batch — no per-row Python loop, no pandas
-    objects. An empty series has no buckets, so it yields no rows."""
+    objects. An empty series has no buckets, so it yields no rows; a
+    null ``tokens`` array counts as empty (its length is filled with 0)."""
     import pyarrow as pa
 
     la = batch.column("tokens")
     doc_id_arr = batch.column("doc_id")
-    lens = la.value_lengths().to_numpy().astype(np.int64)
+    lens = la.value_lengths().fill_null(0).to_numpy().astype(np.int64)
     if lens.shape[0] == 0 or lens.sum() == 0:
         return []
     values = la.flatten().to_numpy()  # zero-copy view of the flat buffer

@@ -44,6 +44,8 @@ class IncrementalRollup:
     """Batch-incremental, checkpoint-resumable all-tier rollup."""
 
     def __init__(self, store_dir: str, n_batches: int = 8):
+        if n_batches < 1:
+            raise ValueError(f"n_batches must be >= 1, got {n_batches}")
         self.store_dir = store_dir
         self.n_batches = n_batches
         self.ckpt_dir = os.path.join(store_dir, "_checkpoint")

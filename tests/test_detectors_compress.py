@@ -146,6 +146,27 @@ def test_compression_beats_raw_on_long_blocks(spark):
     assert rep[0]["enc_bytes"] == sum(len(b) for r in blobs for b in r)
 
 
+def test_null_tokens_roll_up_as_empty_series(spark):
+    """A null ``tokens`` array yields what ``[]`` yields (no rows), on
+    the tier map and through the compressed store, instead of failing
+    the whole job."""
+    from dtaianomaly_spark.rollup import compress as CMP
+    from dtaianomaly_spark.rollup import tiers as T
+
+    def frame(middle):
+        return spark.sql(
+            "SELECT * FROM VALUES ('a', sequence(0, 39)),"
+            f" ('b', CAST({middle} AS array<int>)), ('c', array(7, -3, 5))"
+            " AS t(doc_id, tokens)"
+        ).coalesce(1)
+
+    for op in (T.rollup_tiers_map,
+               lambda df: CMP.decompress_tiers(CMP.rollup_compress_map(df))):
+        got, want = op(frame("NULL")), op(frame("array()"))
+        assert want.count() > 0
+        assert got.exceptAll(want).union(want.exceptAll(got)).count() == 0
+
+
 def _one_series_blocks(spark):
     """The three compressed blocks (raw, 1m, 1h) of one 40-tick series."""
     from dtaianomaly_spark.rollup import compress as CMP

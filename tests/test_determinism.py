@@ -70,7 +70,6 @@ FAMILIES = [
                           # partitioning
     "det_shesd_report",   # sorted decompose folds + lowest-index tie
                           # break in the ESD sweep
-    "compress_pla",       # sequential corridor walk per series
     "ev_anomaly_spans",   # islands over flagged positions + span aggs
     "sw_eh_sliding",      # sequential DGIM replay per series
     "det_hw_error",       # sequential HW recursion per series

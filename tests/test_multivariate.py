@@ -49,7 +49,7 @@ def test_matrix_profile_mv_matches_numpy_oracle(spark):
     composition only."""
     got = {}
     for r in (
-        DET.matrix_profile_scores_mv(
+        DET.matrix_profile_scores(
             C.token_arrays_mv(spark, SF_DIR).filter("doc_id < 6"), 32
         ).collect()
     ):

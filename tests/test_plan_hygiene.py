@@ -48,8 +48,6 @@ EXCHANGE_BOUNDS = [
                                    # window pass + audit join (co-keyed)
     ("ev_anomaly_spans", 3),       # score window + threshold ranks +
                                    # island window/agg on flagged rows
-    ("compress_pla", 1),           # map-only Arrow encode+verify; the
-                                   # one exchange is token_arrays
     ("det_shesd_report", 5),       # decompose window + phase/center
                                    # aggregates + median join + per-doc
                                    # array rebuild before the Arrow ESD

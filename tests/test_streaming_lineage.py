@@ -305,6 +305,18 @@ def test_resume_with_other_n_batches_is_refused(
     assert _store_state(store) == before
 
 
+def test_fewer_than_one_batch_is_refused(tmp_path):
+    """A run over no batches would commit nothing and look complete, so
+    ``n_batches < 1`` is refused before any directory is made."""
+    from dtaianomaly_spark.streaming.incremental import IncrementalRollup
+
+    for n in (0, -1):
+        store = tmp_path / f"store{n}"
+        with pytest.raises(ValueError, match="n_batches"):
+            IncrementalRollup(str(store), n)
+        assert not store.exists()
+
+
 def rollup_once(corpus):
     return T.rollup_tiers_map(corpus)
 
