@@ -6,12 +6,13 @@ Model: the corpus is partitioned into deterministic **batches**: batch
 (:func:`_residue`). A batch is one ``batch=<id>/`` parquet directory of
 the tier store (the sandbox stand-in for an Iceberg snapshot commit) and
 one record in ``_checkpoint/committed.jsonl`` (atomic rename). A run is
-ONE Spark job: one scan of every pending batch's rows, observed for its
+ONE Spark job: one scan of the corpus, observed for every batch's
 counts, and one write partitioned by batch that replaces only the
 pending directories (dynamic partition overwrite); then one record per
 batch is appended. A crash after the write leaves unlogged directories
 that no snapshot reads; the resume — the anti-join of work-units against
-the commit log — rewrites them and never touches a committed one.
+the commit log — rewrites them and never touches a committed one, and
+is refused if the corpus no longer matches a committed record's counts.
 
 The same rollup kernel also runs under real Structured Streaming
 (:func:`stream_rollup`): files-source → ``mapInArrow`` rollup →
@@ -88,18 +89,22 @@ class IncrementalRollup:
 
     # -- processing ---------------------------------------------------------
 
-    def run(self, corpus: DataFrame, fail_after: int | None = None) -> int:
+    def run(self, corpus: DataFrame) -> int:
         """Roll up every not-yet-committed batch in one Spark job, then log
         one record per batch in batch order; returns the number logged.
-        ``fail_after`` stops after N records (crash injection for the
-        resume tests). ``wall_ms`` is the whole job's wall time. A batch
-        with no tokens writes no directory: its ``path`` is ``None``.
+        ``wall_ms`` is the whole job's wall time. A batch with no tokens
+        writes no directory: its ``path`` is ``None``.
 
         Each record stores ``n_batches``. A log holding a batch record
         with another value raises ``ValueError`` before anything is
         written: its batch ids name other series, so resuming would
         duplicate or drop them. Records without the key predate it and
-        are accepted."""
+        are accepted. A committed record whose series or token count
+        differs from the corpus's raises ``ValueError`` naming its batch,
+        and nothing is logged: the pending directories just written stay
+        unlogged, as after a crash. Not detected: a changed corpus when
+        nothing is pending (returns 0 without a scan), and a token value
+        changed without a change in any length."""
         done = self.committed()
         other = {r.get("n_batches", self.n_batches) for r in done.values()}
         other.discard(self.n_batches)
@@ -114,30 +119,36 @@ class IncrementalRollup:
         t0 = time.perf_counter()
         batch = _residue(F.col("doc_id"), self.n_batches)
         obs = Observation()
-        part = corpus.filter(batch.isin(pending)).observe(
+        part = corpus.observe(
             obs,
-            *(F.count_if(batch == b).alias(f"series{b}") for b in pending),
+            *(F.count_if(batch == b).alias(f"series{b}")
+              for b in range(self.n_batches)),
             *(F.sum(F.when(batch == b, F.col("n_tok"))).alias(f"tokens{b}")
-              for b in pending),
-        )
+              for b in range(self.n_batches)),
+        ).filter(batch.isin(pending))
         (
             rollup_tiers_map(part).withColumn("batch", batch)
             .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch").parquet(self.store_dir)
         )
         stats = obs.get
+        counts = {b: (stats[f"series{b}"], int(stats[f"tokens{b}"] or 0))
+                  for b in range(self.n_batches)}
+        changed = [b for b in sorted(done)
+                   if (done[b]["series"], done[b]["tokens"]) != counts[b]]
+        if changed:
+            raise ValueError(f"the corpus changed since batches {changed}"
+                             f" of {self.log_path} were committed")
         wall_ms = int(1000 * (time.perf_counter() - t0))
-        for processed, b in enumerate(pending, 1):
-            tokens = int(stats[f"tokens{b}"] or 0)
+        for b in pending:
+            series, tokens = counts[b]
             path = os.path.join(self.store_dir, f"batch={b}") if tokens else None
             self._append_commit({
                 "batch": b, "n_batches": self.n_batches,
-                "series": stats[f"series{b}"], "tokens": tokens,
+                "series": series, "tokens": tokens,
                 "wall_ms": wall_ms, "path": path, "ts": time.time(),
             })
-            if fail_after is not None and processed >= fail_after:
-                break
-        return processed
+        return len(pending)
 
     # -- snapshot time travel + compaction ----------------------------------
 

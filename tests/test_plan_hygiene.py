@@ -281,6 +281,12 @@ def _plan(df):
     )
 
 
+# query name -> its cold-cache plan, as test_exchange_bound built it;
+# test_no_row_python_udf_anywhere inspects these instead of planning
+# the same queries a second time.
+_COLD_PLANS = {}
+
+
 @pytest.mark.parametrize("name,bound", EXCHANGE_BOUNDS)
 def test_exchange_bound(spark, name, bound):
     # cold-cache plan, exactly how scripts/plan_audit.py measures: a
@@ -289,7 +295,7 @@ def test_exchange_bound(spark, name, bound):
     # InMemoryRelation whose displayed child inflates the count
     # order-dependently
     spark.catalog.clearCache()
-    plan = _plan(E.queries()[name](spark, SF_DIR))
+    plan = _COLD_PLANS[name] = _plan(E.queries()[name](spark, SF_DIR))
     tree = plan.split("\n\n")[0]
     n_ex = len(re.findall(r"\bExchange\b", tree))
     assert n_ex <= bound, f"{name}: {n_ex} exchanges > designed {bound}\n{tree}"
@@ -300,11 +306,13 @@ def test_no_row_python_udf_anywhere(spark):
     MapInPandas / FlatMapGroupsInPandas) — BatchEvalPython (row-at-a-
     time pickling) is banned from the whole query surface. The ban is
     only meaningful if it actually inspects the surface, so every query
-    must plan (a build error in one query must not silently exempt it)."""
+    must plan (a build error in one query must not silently exempt it).
+    A query whose cold plan test_exchange_bound already built is checked
+    on that plan."""
     offenders, checked = [], 0
     for name, fn in E.queries().items():
         try:
-            plan = _plan(fn(spark, SF_DIR))
+            plan = _COLD_PLANS.get(name) or _plan(fn(spark, SF_DIR))
         except Exception:  # noqa: BLE001 — plan-ability itself is
             continue       # covered by the correctness tests
         checked += 1

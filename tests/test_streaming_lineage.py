@@ -40,7 +40,32 @@ def _counts(df):
     return r["s"], r["t"]
 
 
-def test_incremental_rollup_resumes_from_checkpoint(spark, tmp_path):
+class _Crash(Exception):
+    """The crash that :func:`_crash_after` injects."""
+
+
+def _crash_after(monkeypatch, inc, corpus, k):
+    """Run ``inc`` over ``corpus`` as a process that dies after its
+    ``k``-th commit record (every pending directory is written, the
+    rest is unlogged); returns the number of records in the log."""
+    from dtaianomaly_spark.streaming.incremental import IncrementalRollup
+
+    append_commit, appended = IncrementalRollup._append_commit, []
+
+    def append_then_crash(self, rec):
+        if len(appended) == k:
+            raise _Crash
+        appended.append(rec)
+        append_commit(self, rec)
+
+    with monkeypatch.context() as m:
+        m.setattr(IncrementalRollup, "_append_commit", append_then_crash)
+        with pytest.raises(_Crash):
+            inc.run(corpus)
+    return len(inc.snapshots())
+
+
+def test_incremental_rollup_resumes_from_checkpoint(spark, tmp_path, monkeypatch):
     from dtaianomaly_spark.streaming.incremental import IncrementalRollup
 
     corpus = _corpus(spark)
@@ -48,7 +73,7 @@ def test_incremental_rollup_resumes_from_checkpoint(spark, tmp_path):
 
     inc = IncrementalRollup(store, n_batches=6)
     # crash after 2 committed batches
-    assert inc.run(corpus, fail_after=2) == 2
+    assert _crash_after(monkeypatch, inc, corpus, 2) == 2
     assert len(inc.committed()) == 2
 
     # resume: a NEW instance (fresh process semantics) picks up the log
@@ -86,7 +111,7 @@ def _jobs_of(spark, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_incremental_rollup_runs_one_spark_job_per_run(spark, tmp_path):
+def test_incremental_rollup_runs_one_spark_job_per_run(spark, tmp_path, monkeypatch):
     """A run is one Spark job however many batches are pending: one scan
     and one partitioned write cover them all, and the write observes
     every batch's series and token counts, so no second query runs."""
@@ -100,7 +125,7 @@ def test_incremental_rollup_runs_one_spark_job_per_run(spark, tmp_path):
     assert [r["batch"] for r in inc.snapshots()] == [0, 1, 2, 3]
 
     resumed = IncrementalRollup(str(tmp_path / "resumed"), n_batches=4)
-    assert resumed.run(corpus, fail_after=2) == 2
+    assert _crash_after(monkeypatch, resumed, corpus, 2) == 2
     assert _jobs_of(spark, lambda: resumed.run(corpus)) == (2, 1)
     assert [r["batch"] for r in resumed.snapshots()] == [0, 1, 2, 3]
 
@@ -282,11 +307,11 @@ def _store_state(store):
 
 
 @pytest.mark.parametrize(
-    "first,fail_after,second", [(4, None, 8), (8, 3, 4)],
+    "first,crash_after,second", [(4, None, 8), (8, 3, 4)],
     ids=["complete-4-then-8", "partial-8-then-4"],
 )
 def test_resume_with_other_n_batches_is_refused(
-    spark, tmp_path, first, fail_after, second
+    spark, tmp_path, monkeypatch, first, crash_after, second
 ):
     """Batch ids only name the same series under the same ``n_batches``.
     Resuming a log with another value would duplicate series (4 then 8)
@@ -297,12 +322,65 @@ def test_resume_with_other_n_batches_is_refused(
     twelve = _corpus(spark).orderBy("doc_id").limit(12)
     corpus = spark.createDataFrame(twelve.collect(), twelve.schema)
     store = str(tmp_path / "store")
-    IncrementalRollup(store, first).run(corpus, fail_after=fail_after)
+    if crash_after is None:
+        IncrementalRollup(store, first).run(corpus)
+    else:
+        _crash_after(monkeypatch, IncrementalRollup(store, first), corpus,
+                     crash_after)
     before = _store_state(store)
 
     with pytest.raises(ValueError, match=f"n_batches=\\[{first}\\]"):
         IncrementalRollup(store, second).run(corpus)
     assert _store_state(store) == before
+
+
+@pytest.mark.parametrize("change", ["added", "removed", "shortened"])
+def test_resume_over_changed_corpus_is_refused(
+    spark, tmp_path, monkeypatch, change
+):
+    """A resume rolls up only the pending batches, so a series added to,
+    removed from or shortened in a committed batch would leave the store
+    wrong without notice. The run compares every committed record with
+    the corpus's counts and refuses: nothing is logged and the committed
+    directories keep their files."""
+    from dtaianomaly_spark.streaming.incremental import IncrementalRollup
+
+    twelve = _corpus(spark).orderBy("doc_id").limit(12)
+    rows = [tuple(r) for r in twelve.collect()]
+    store = str(tmp_path / "store")
+    inc = IncrementalRollup(store, 4)
+    corpus = spark.createDataFrame(rows, twelve.schema)
+    assert _crash_after(monkeypatch, inc, corpus, 2) == 2
+    committed = {r["batch"] for r in inc.snapshots()}
+
+    def batch_of(doc_ids):
+        df = spark.createDataFrame([(d,) for d in doc_ids], "doc_id string")
+        return dict(df.select("doc_id", _residue(F.col("doc_id"), 4)).collect())
+
+    batches = batch_of([r[0] for r in rows])
+    i = next(i for i, (doc_id, _, n_tok) in enumerate(rows)
+             if batches[doc_id] in committed and n_tok > 0)
+    if change == "added":
+        new = batch_of([f"added-{j}" for j in range(64)])
+        rows.append((next(d for d, b in new.items() if b in committed),
+                     [1, 2, 3], 3))
+    elif change == "removed":
+        del rows[i]
+    else:
+        doc_id, tokens, n_tok = rows[i]
+        rows[i] = (doc_id, tokens[:-1], n_tok - 1)
+
+    def committed_files():
+        files, log = _store_state(store)
+        return log, {f for f in files
+                     if f[0].split(os.sep)[0] in {f"batch={b}" for b in committed}}
+
+    before = committed_files()
+    assert before[1]
+    with pytest.raises(ValueError, match="corpus changed since batches"):
+        IncrementalRollup(store, 4).run(spark.createDataFrame(rows, twelve.schema))
+    assert len(before[0].splitlines()) == 2
+    assert committed_files() == before  # same log, same sizes and mtimes
 
 
 def test_fewer_than_one_batch_is_refused(tmp_path):
@@ -415,7 +493,7 @@ def test_salted_agg_equals_plain_groupby(spark):
     assert hot["cnt"] == 90_000
 
 
-def test_snapshot_time_travel(spark, tmp_path):
+def test_snapshot_time_travel(spark, tmp_path, monkeypatch):
     """read_as_of(k) is the store exactly after the k-th commit, and an
     earlier snapshot's content is immutable under later appends."""
     from dtaianomaly_spark.streaming.incremental import IncrementalRollup
@@ -423,7 +501,7 @@ def test_snapshot_time_travel(spark, tmp_path):
     corpus = _corpus(spark)
     store = str(tmp_path / "store")
     inc = IncrementalRollup(store, n_batches=5)
-    assert inc.run(corpus, fail_after=3) == 3
+    assert _crash_after(monkeypatch, inc, corpus, 3) == 3
 
     snap3 = _canon(inc.read_as_of(spark, 3))
     recs = inc.snapshots()
