@@ -3,20 +3,26 @@ delta-of-delta for integer streams, the compressed tier's store path
 (rollup/compress.py), and XOR for float streams, which is off that path;
 its callers are tests/test_codec.py and perfbench's codec probe.
 
-Encoding maps each value to one or two (code, bit-length) pairs; the
-pairs are exploded to a flat bit vector with repeat/arange arithmetic and
-packed with ``np.packbits``. ``dod_encode`` computes its codes with NumPy
-only. ``xor_encode`` decides window reuse in a per-value Python control
-loop, then builds its codes with NumPy. Both decoders walk the prefix
-codes in Python, reading one bit at a time; a blob shorter than the
-4-byte header, or a read past the end of the stream, raises ``ValueError``.
-``dod_decode`` rebuilds the values with two int64 ``np.cumsum`` passes,
-which wrap at 64 bits as the encoder's ``np.diff`` does, so every int64
-stream round-trips, full-range jumps included.
+Encoding maps each value to one or two (code, bit-length) pairs, and
+``_pack_words`` packs the pairs MSB-first: each code lands in at most two
+big-endian 64-bit words, merged with ``bitwise_or.reduceat``.
+``dod_encode_blocks`` encodes every block of one int64 column in one
+segmented NumPy pass: ``np.diff`` twice over the whole column, each row's
+code chosen by its position in its block (v0, delta0, or its
+delta-of-delta bucket), zero bits padding each block to a byte boundary,
+and one pack of all blocks into one ``pa.BinaryArray``.
+``dod_encode`` is its one-block call. ``xor_encode`` decides window
+reuse in a per-value Python control loop, then builds its codes with
+NumPy. Both decoders walk the prefix codes in Python, reading one bit at
+a time; a blob shorter than the 4-byte header, or a read past the end of
+the stream, raises ``ValueError``. ``dod_decode`` rebuilds the values
+with two int64 ``np.cumsum`` passes, which wrap at 64 bits as the
+encoder's ``np.diff`` does, so every int64 stream round-trips,
+full-range jumps included.
 
 Wire formats
 ------------
-delta-of-delta (``dod_encode``):
+delta-of-delta (``dod_encode``, ``dod_encode_blocks``):
   [u32 n] then bitstream: v0 as 64 raw bits; delta0 as 64 raw bits;
   then per value the Gorilla bucket code of D = delta_t - delta_{t-1}:
     '0'                 D == 0
@@ -24,6 +30,7 @@ delta-of-delta (``dod_encode``):
     '110' + 9  bits     D in [-255, 256]     (stored D + 255)
     '1110'+ 12 bits     D in [-2047, 2048]   (stored D + 2047)
     '1111'+ 64 bits     otherwise            (stored as two's complement)
+  and zero bits up to the next byte boundary.
 
 float XOR (``xor_encode``):
   [u32 n] then bitstream: v0 as 64 raw bits; then per value with
@@ -38,21 +45,35 @@ from __future__ import annotations
 import numpy as np
 
 
-def _pack_bits(codes: np.ndarray, lens: np.ndarray) -> bytes:
-    """Pack (code, bit_length<=64) pairs MSB-first into bytes."""
+def _pack_words(codes: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Pack (code, bit_length<=64) pairs MSB-first into a uint8 array.
+
+    Each code must fit in its bit length (a zero-length code is 0). A
+    code lands in at most two 64-bit words: the word holding its first
+    bit, and the next one when it runs over the word edge. The first
+    parts are OR-merged per word with ``bitwise_or.reduceat`` over the
+    sorted word indices; only the last code starting in a word can run
+    over into the next. The words are written big-endian.
+    """
     codes = np.asarray(codes, dtype=np.uint64)
-    lens = np.asarray(lens, dtype=np.int64)
-    keep = lens > 0
-    codes, lens = codes[keep], lens[keep]
-    total = int(lens.sum())
-    if total == 0:
-        return b""
-    starts = np.concatenate([[0], np.cumsum(lens)[:-1]])
-    elem = np.repeat(np.arange(lens.shape[0]), lens)
-    intra = np.arange(total) - np.repeat(starts, lens)
-    shift = (np.repeat(lens, lens) - 1 - intra).astype(np.uint64)
-    bits = ((codes[elem] >> shift) & np.uint64(1)).astype(np.uint8)
-    return np.packbits(bits).tobytes()
+    ends = np.cumsum(lens, dtype=np.int64)
+    if not ends.shape[0]:
+        return np.zeros(0, dtype=np.uint8)
+    total = int(ends[-1])
+    words = np.zeros(total // 64 + 2, dtype=np.uint64)
+    word = (ends - lens) >> 6
+    end_bit = ends - (word << 6)  # in 0 .. 127
+    head = (codes >> np.maximum(end_bit - 64, 0).astype(np.uint64)) << np.maximum(
+        64 - end_bit, 0).astype(np.uint64)
+    # codes at these positions start a word's run; the one before each
+    # ends the previous run
+    next_word = np.flatnonzero(word[1:] != word[:-1]) + 1
+    runs = np.concatenate([[0], next_word])
+    words[word[runs]] = np.bitwise_or.reduceat(head, runs)
+    last = np.concatenate([next_word, [word.shape[0]]]) - 1
+    last = last[end_bit[last] > 64]
+    words[word[last] + 1] |= codes[last] << (128 - end_bit[last]).astype(np.uint64)
+    return words.astype(">u8").view(np.uint8)[: -(-total // 8)]
 
 
 class _BitReader:
@@ -74,58 +95,84 @@ class _BitReader:
         return out
 
 
-_DOD_BUCKETS = (  # (max_abs_lo, max_hi, prefix, prefix_len, payload_bits, bias)
-    (-63, 64, 0b10, 2, 7, 63),
-    (-255, 256, 0b110, 3, 9, 255),
-    (-2047, 2048, 0b1110, 4, 12, 2047),
-)
+# Delta-of-delta code classes, found by searching _DOD_TOPS for the
+# zigzag code of D - 1. That map sends the bucket [-63, 64] onto
+# [0, 128), [-255, 256] onto [0, 512), [-2047, 2048] onto [0, 4096), and
+# D == 0 alone onto 1, so the classes are '10' (zigzag 0), '0', '10',
+# '110', '1110', and the '1111' escape, whose 64 bits go in a second
+# pair. Per class: the prefix shifted over its payload, the code length,
+# and the payload's bias and mask.
+_DOD_TOPS = np.array([1, 2, 128, 512, 4096], dtype=np.uint64)
+_DOD_HEAD = np.array([0b10 << 7, 0, 0b10 << 7, 0b110 << 9, 0b1110 << 12, 0b1111],
+                     dtype=np.uint64)
+_DOD_LEN = np.array([9, 1, 9, 12, 16, 4], dtype=np.int64)
+_DOD_BIAS = np.array([63, 0, 63, 255, 2047, 0], dtype=np.int64)
+_DOD_MASK = np.array([127, 0, 127, 511, 4095, 0], dtype=np.uint64)
+_DOD_ESCAPE = 5
+
+
+def dod_encode_blocks(values: np.ndarray, heads: np.ndarray):
+    """Delta-of-delta encode every block of one int64 column in one pass.
+
+    Block ``b`` is ``values[heads[b]:heads[b + 1]]`` (the last one runs
+    to the end); ``heads`` is non-decreasing and starts at 0 when there
+    are values. Returns one blob per block as a ``pa.BinaryArray``, each
+    byte-identical to a separate encode of that block.
+    """
+    import pyarrow as pa
+
+    v = np.asarray(values, dtype=np.int64)
+    heads = np.asarray(heads, dtype=np.int64)
+    n = np.concatenate([heads[1:], [v.shape[0]]]) - heads  # values per block
+    # whole-column differences wrap at 64 bits; a row's delta-of-delta
+    # reads only rows of its own block from its third row on
+    delta = v - np.concatenate([v[:1], v[:-1]])
+    dod = delta - np.concatenate([delta[:1], delta[:-1]])
+    e = dod - 1
+    zigzag = (e.view(np.uint64) << np.uint64(1)) ^ (e >> 63).view(np.uint64)
+    k = np.searchsorted(_DOD_TOPS, zigzag, side="right")
+    esc = k == _DOD_ESCAPE
+    # per row two (code, length) pairs; only an escape uses the second
+    code = np.empty((v.shape[0], 2), dtype=np.uint64)
+    ln = np.empty((v.shape[0], 2), dtype=np.int64)
+    code[:, 0] = _DOD_HEAD[k] | ((dod + _DOD_BIAS[k]).view(np.uint64) & _DOD_MASK[k])
+    code[:, 1] = dod.view(np.uint64) * esc
+    ln[:, 0] = _DOD_LEN[k]
+    ln[:, 1] = esc * 64
+    # a block's first two rows hold v0 and delta0 as 64 raw bits
+    first, second = heads[n > 0], heads[n > 1] + 1
+    seed = np.concatenate([first, second])
+    code[seed, 0] = np.concatenate([v[first], delta[second]]).view(np.uint64)
+    code[seed, 1] = 0
+    ln[seed] = (64, 0)
+
+    # a block is its u32 little-endian count as one 32-bit code, its
+    # rows' pairs, then zero bits up to a byte boundary; the pad is
+    # carried as leading zeros of the next block's count code
+    row_ends = np.concatenate([[0], np.cumsum(ln[:, 0] + ln[:, 1])])
+    bits = 32 + row_ends[heads + n] - row_ends[heads]
+    pad = -bits % 8
+    head_code = n.astype(np.uint32).byteswap().astype(np.uint64)
+    head_len = 32 + np.concatenate([[0], pad])[:-1]
+    head_slot = 2 * heads + np.arange(heads.shape[0])
+    row_slot = np.ones(2 * v.shape[0] + heads.shape[0], dtype=bool)
+    row_slot[head_slot] = False
+    codes = np.empty(row_slot.shape[0], dtype=np.uint64)
+    lens = np.empty(row_slot.shape[0], dtype=np.int64)
+    codes[head_slot], codes[row_slot] = head_code, code.ravel()
+    lens[head_slot], lens[row_slot] = head_len, ln.ravel()
+
+    offsets = np.zeros(heads.shape[0] + 1, dtype=np.int32)
+    np.cumsum((bits + pad) // 8, out=offsets[1:])
+    return pa.BinaryArray.from_buffers(
+        pa.binary(), heads.shape[0],
+        [None, pa.py_buffer(offsets), pa.py_buffer(_pack_words(codes, lens))])
 
 
 def dod_encode(values: np.ndarray) -> bytes:
-    """Delta-of-delta encode an int64 stream."""
-    v = np.asarray(values, dtype=np.int64)
-    n = v.shape[0]
-    header = np.uint32(n).tobytes()
-    if n == 0:
-        return header
-    codes = [np.array([v[0]], dtype=np.uint64)]
-    lens = [np.array([64], dtype=np.int64)]
-    if n >= 2:
-        deltas = np.diff(v)
-        codes.append(np.array([deltas[0]], dtype=np.int64).astype(np.uint64))
-        lens.append(np.array([64], dtype=np.int64))
-        if n >= 3:
-            d = np.diff(deltas)
-            c = np.empty(d.shape[0], dtype=np.uint64)
-            ln = np.empty(d.shape[0], dtype=np.int64)
-            done = d == 0
-            c[done] = 0
-            ln[done] = 1
-            for lo, hi, prefix, plen, bits, bias in _DOD_BUCKETS:
-                sel = (~done) & (d >= lo) & (d <= hi)
-                c[sel] = (np.uint64(prefix) << np.uint64(bits)) | (
-                    (d[sel] + bias).astype(np.uint64)
-                )
-                ln[sel] = plen + bits
-                done |= sel
-            rest = ~done
-            # '1111' + 64-bit two's complement; emitted as two pairs
-            if rest.any():
-                ln[rest] = 0  # placeholder, real pairs appended below
-            codes.append(c)
-            lens.append(ln)
-            if rest.any():
-                # interleave: rebuild with two-column layout to keep order
-                c2 = np.zeros((d.shape[0], 2), dtype=np.uint64)
-                l2 = np.zeros((d.shape[0], 2), dtype=np.int64)
-                c2[:, 0], l2[:, 0] = c, ln
-                c2[rest, 0] = 0b1111
-                l2[rest, 0] = 4
-                c2[rest, 1] = d[rest].astype(np.uint64)
-                l2[rest, 1] = 64
-                codes[-1] = c2.ravel()
-                lens[-1] = l2.ravel()
-    return header + _pack_bits(np.concatenate(codes), np.concatenate(lens))
+    """Delta-of-delta encode an int64 stream: one block of
+    :func:`dod_encode_blocks`."""
+    return dod_encode_blocks(values, [0])[0].as_py()
 
 
 def _read_header(data: bytes) -> tuple[int, _BitReader]:
@@ -194,7 +241,7 @@ def xor_encode(values: np.ndarray) -> bytes:
         return header
     bits = v.view(np.uint64)
     if n == 1:
-        return header + _pack_bits([bits[0]], [64])
+        return header + _pack_words([bits[0]], [64]).tobytes()
 
     x = bits[1:] ^ bits[:-1]
     lead = np.minimum(_clz64(x), 31)  # 5-bit field
@@ -253,7 +300,7 @@ def xor_encode(values: np.ndarray) -> bytes:
 
     codes = np.concatenate([[bits[0]], c2.ravel()])
     lens = np.concatenate([[64], l2.ravel()])
-    return header + _pack_bits(codes, lens)
+    return header + _pack_words(codes, lens).tobytes()
 
 
 def xor_decode(data: bytes) -> np.ndarray:

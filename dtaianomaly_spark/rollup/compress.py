@@ -10,10 +10,12 @@ stored: ``bucket`` runs ``0 .. n_points - 1`` within a block, and
 Physical shape: :func:`rollup_compress_map` is one map-only
 ``mapInArrow`` pass. It rolls each Arrow batch up with the batched
 kernel behind :func:`~dtaianomaly_spark.rollup.tiers.rollup_tiers_map`
-and encodes each (series, tier) as one row of blocks. Decompression
-(:func:`decompress_tiers`) is the exact inverse, also a ``mapInArrow``
-that builds its rows with the ingest's own batch builder; the round
-trip is tested, so queries can be served straight from compressed blocks.
+and encodes each (series, tier) as one row of blocks; each column of a
+tier batch is encoded, all its blocks at once, in one segmented
+``dod_encode_blocks`` pass. Decompression (:func:`decompress_tiers`) is
+the exact inverse, also a ``mapInArrow`` that builds its rows with the
+ingest's own batch builder; the round trip is tested, so queries can be
+served straight from compressed blocks.
 """
 
 from __future__ import annotations
@@ -44,18 +46,15 @@ COMPRESSED_SCHEMA = StructType(
 def _encode_tier_batch(tb):
     """Encode one per-tier RecordBatch of :func:`_rollup_arrow_batch` as
     compressed blocks. Its rows are series-contiguous with buckets
-    counting up from 0, so every ``bucket == 0`` starts a new block."""
+    counting up from 0, so every ``bucket == 0`` starts a new block; each
+    of the seven columns is encoded, all its blocks at once, by one
+    :func:`~dtaianomaly_spark.kernels.codec.dod_encode_blocks` call."""
     import pyarrow as pa
 
     heads = np.flatnonzero(tb.column("bucket").to_numpy() == 0)
-    bounds = np.append(heads, tb.num_rows)
-    blocks = list(zip(bounds[:-1], bounds[1:]))
     arrays = [tb.column("doc_id").take(heads), tb.column("tier").take(heads),
-              pa.array(np.diff(bounds))]
-    for c in INT_COLS:
-        v = tb.column(c).to_numpy()
-        arrays.append(pa.array([KC.dod_encode(v[s:e]) for s, e in blocks],
-                               type=pa.binary()))
+              pa.array(np.diff(heads, append=tb.num_rows))]
+    arrays += [KC.dod_encode_blocks(tb.column(c).to_numpy(), heads) for c in INT_COLS]
     return pa.RecordBatch.from_arrays(arrays, names=COMPRESSED_SCHEMA.names)
 
 

@@ -4,6 +4,7 @@ import os
 import sys
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -87,14 +88,14 @@ def test_compress_roundtrip_exact(spark):
         assert ra == rb
 
 
-def test_compress_roundtrip_matches_brute_force_stats(spark):
-    """decompress(rollup_compress_map(x)) equals a per-bucket NumPy
-    computation on every tier, for series lengths on each side of every
-    tier boundary (16, 960, 57 600 ticks); empty series have no rows."""
-    import pytest
-
-    from dtaianomaly_spark.rollup import compress as CMP
-    from dtaianomaly_spark.rollup import tiers as T
+@pytest.fixture(scope="module")
+def brute_force_corpus(spark):
+    """Series whose lengths sit on each side of every tier boundary (16,
+    960, 57 600 ticks), empty series first and between two non-empty
+    ones, in one partition, so one Arrow batch holds every series. The
+    frame is built from a ``pyarrow.Table``, which Spark reads without a
+    per-row Python conversion."""
+    import pyarrow as pa
 
     rng = np.random.default_rng(5)
     lengths = (0, 1, 15, 0, 16, 17, 959, 960, 961, 57_600, 57_601)
@@ -102,12 +103,22 @@ def test_compress_roundtrip_matches_brute_force_stats(spark):
         f"s{i}": rng.integers(-(2**20), 2**20, size=n).astype(np.int64)
         for i, n in enumerate(lengths)
     }
-    # one partition, so one Arrow batch holds every series: the empty
-    # series come first and between two non-empty ones
-    arrays = spark.createDataFrame(
-        [(d, x.tolist()) for d, x in series.items()],
-        "doc_id string, tokens array<int>",
-    ).coalesce(1)
+    table = pa.table({
+        "doc_id": pa.array(list(series), pa.string()),
+        "tokens": pa.array([x.astype(np.int32) for x in series.values()],
+                           pa.list_(pa.int32())),
+    })
+    return series, spark.createDataFrame(table).coalesce(1)
+
+
+def test_compress_roundtrip_matches_brute_force_stats(brute_force_corpus):
+    """decompress(rollup_compress_map(x)) equals a per-bucket NumPy
+    computation on every tier, for series lengths on each side of every
+    tier boundary; empty series have no rows."""
+    from dtaianomaly_spark.rollup import compress as CMP
+    from dtaianomaly_spark.rollup import tiers as T
+
+    series, arrays = brute_force_corpus
     got = {}
     for r in CMP.decompress_tiers(CMP.rollup_compress_map(arrays)).collect():
         got[(r["doc_id"], r["tier"], r["bucket"])] = r
@@ -131,6 +142,30 @@ def test_compress_roundtrip_matches_brute_force_stats(spark):
         for f in ("cnt", "sum", "sumsq", "min", "max", "first", "last", "mean"):
             assert r[f] == exp[f], (key, f)
         assert r["std"] == pytest.approx(exp["std"], rel=1e-9), key
+
+
+def test_compressed_blobs_equal_per_block_encoding(brute_force_corpus):
+    """Every ``*_enc`` blob of ``rollup_compress_map`` equals the per-block
+    twin encoder applied to that (doc_id, tier)'s column of
+    ``rollup_tiers_map``: the one-pass encode of a whole tier batch leaks
+    no delta across a block edge."""
+    from test_codec import naive_dod_encode
+
+    from dtaianomaly_spark.rollup import compress as CMP
+    from dtaianomaly_spark.rollup import tiers as T
+
+    _, arrays = brute_force_corpus
+    columns = {}
+    for r in T.rollup_tiers_map(arrays).orderBy("doc_id", "tier", "bucket").collect():
+        columns.setdefault((r["doc_id"], r["tier"]), []).append(r)
+    blocks = {(r["doc_id"], r["tier"]): r for r in CMP.rollup_compress_map(arrays).collect()}
+    assert blocks.keys() == columns.keys()
+    assert any(len(rows) > 1 for rows in columns.values())
+    for key, rows in columns.items():
+        assert blocks[key]["n_points"] == len(rows), key
+        for c in CMP.INT_COLS:
+            want = naive_dod_encode(np.array([r[c] for r in rows], dtype=np.int64))
+            assert bytes(blocks[key][f"{c}_enc"]) == want, (key, c)
 
 
 def test_compression_beats_raw_on_long_blocks(spark):
