@@ -5,6 +5,14 @@ per-series token arrays, AQE for runtime re-planning (skew joins, partition
 coalescing), and shuffle-partition counts sized to the local core count.
 On a real cluster the same settings apply per-executor; nothing here is
 local-mode-specific except the master URL default.
+
+``spark.python.daemon.module`` names :mod:`dtaianomaly_spark._daemon`.
+With Spark's stock daemon every Python task, whatever its UDF, first
+re-read the ``pyspark.zip`` directory once per cached zip importer:
+0.1-0.3 s per task with 4 workers (PySpark 4.1, CPython 3.11), about half
+of a ``compressed_ingest`` op. A warm 4-task ``mapInArrow`` over 8 rows
+took 0.34-0.40 s with the stock daemon and takes 0.16-0.18 s with this
+one (4 vCPUs).
 """
 
 from __future__ import annotations
@@ -38,6 +46,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.python.daemon.module", "dtaianomaly_spark._daemon")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

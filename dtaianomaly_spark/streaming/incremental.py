@@ -142,11 +142,10 @@ class IncrementalRollup:
         wall_ms = int(1000 * (time.perf_counter() - t0))
         for b in pending:
             series, tokens = counts[b]
-            path = os.path.join(self.store_dir, f"batch={b}") if tokens else None
             self._append_commit({
                 "batch": b, "n_batches": self.n_batches,
-                "series": series, "tokens": tokens,
-                "wall_ms": wall_ms, "path": path, "ts": time.time(),
+                "series": series, "tokens": tokens, "wall_ms": wall_ms,
+                "path": f"batch={b}" if tokens else None, "ts": time.time(),
             })
         return len(pending)
 
@@ -167,14 +166,17 @@ class IncrementalRollup:
 
     def _paths_as_of(self, snapshot: int) -> list:
         """Replay the first ``snapshot`` log records into the live data
-        directory set (compaction replaces, batch commits append)."""
+        directory set (compaction replaces, batch commits append). A
+        record names its directory relative to the store (``batch=<b>``,
+        ``compact=<n>``), so a copied or moved store reads its own; an
+        absolute path of an older record is kept as it is."""
         paths = []
         for rec in self.snapshots()[: max(0, snapshot)]:
             if rec.get("kind") == "compact":
                 paths = [rec["path"]]
             elif rec["path"] is not None:
                 paths.append(rec["path"])
-        return paths
+        return [os.path.join(self.store_dir, p) for p in paths]
 
     def read_as_of(self, spark: SparkSession, snapshot: int) -> DataFrame:
         """Time travel: the tier store exactly as it stood after the
@@ -204,15 +206,16 @@ class IncrementalRollup:
         live = self._paths_as_of(len(snaps))
         if not live:
             raise ValueError("nothing to compact: empty store")
-        out_dir = os.path.join(self.store_dir, f"compact={len(snaps)}")
+        name = f"compact={len(snaps)}"
+        out_dir = os.path.join(self.store_dir, name)
         df = spark.read.schema(ROLLUP_SCHEMA).parquet(*live)
         df.coalesce(target_files).write.mode("overwrite").parquet(out_dir)
         self._append_commit(
             {
                 "kind": "compact",
                 "batch": None,
-                "path": out_dir,
-                "replaces": live,
+                "path": name,
+                "replaces": [os.path.relpath(p, self.store_dir) for p in live],
                 "ts": time.time(),
             }
         )

@@ -507,7 +507,7 @@ def test_snapshot_time_travel(spark, tmp_path, monkeypatch):
     recs = inc.snapshots()
     assert len(recs) == 3
     # snapshot 3 == union of the first three committed batch dirs
-    first3 = [r["path"] for r in recs]
+    first3 = [os.path.join(store, r["path"]) for r in recs]
     direct = spark.read.schema(T.ROLLUP_SCHEMA).parquet(*first3)
     assert snap3 == _canon(direct)
     # prefix property: snapshot 2 ⊂ snapshot 3 (row multiset)
@@ -547,3 +547,33 @@ def test_compaction_preserves_content_and_history(spark, tmp_path):
     assert inc.run(corpus) == 0
     # appends after compaction layer on top of the compacted state
     assert len(inc.snapshots()) == 6
+
+
+def test_copied_store_reads_its_own_directories(spark, tmp_path):
+    """Commit records name their directories relative to the store, so
+    a copy whose original is gone reads, time-travels and compacts the
+    same rows as the original did."""
+    from dtaianomaly_spark.streaming.incremental import IncrementalRollup
+
+    corpus = _corpus(spark)
+    store, copy = str(tmp_path / "store"), str(tmp_path / "copy")
+    inc = IncrementalRollup(store, n_batches=3)
+    inc.run(corpus)
+    inc.compact(spark, target_files=2)
+    assert [r["path"] for r in inc.snapshots()] == [
+        "batch=0", "batch=1", "batch=2", "compact=3"]
+    want = [_canon(inc.read_as_of(spark, k)) for k in range(5)]
+
+    shutil.copytree(store, copy)
+    shutil.rmtree(store)
+    inc = IncrementalRollup(copy, n_batches=3)
+    assert _canon(inc.read_store(spark)) == want[4]
+    assert [_canon(inc.read_as_of(spark, k)) for k in range(5)] == want
+    assert inc.compact(spark, target_files=1).startswith(copy)
+    assert _canon(inc.read_store(spark)) == want[4]
+    # records written before paths were relative hold absolute ones
+    recs = inc.snapshots()
+    with open(inc.log_path, "w") as f:
+        f.writelines(json.dumps(dict(r, path=os.path.join(copy, r["path"])))
+                     + "\n" for r in recs)
+    assert _canon(inc.read_store(spark)) == want[4]
