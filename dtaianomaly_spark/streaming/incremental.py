@@ -6,13 +6,19 @@ Model: the corpus is partitioned into deterministic **batches**: batch
 (:func:`_residue`). A batch is one ``batch=<id>/`` parquet directory of
 the tier store (the sandbox stand-in for an Iceberg snapshot commit) and
 one record in ``_checkpoint/committed.jsonl`` (atomic rename). A run is
-ONE Spark job: one scan of the corpus, observed for every batch's
-counts, and one write partitioned by batch that replaces only the
-pending directories (dynamic partition overwrite); then one record per
-batch is appended. A crash after the write leaves unlogged directories
-that no snapshot reads; the resume — the anti-join of work-units against
-the commit log — rewrites them and never touches a committed one, and
-is refused if the corpus no longer matches a committed record's counts.
+ONE Spark job, a ``mapInArrow`` over the corpus whose tasks count every
+batch's series and tokens, roll up the pending batches' series and write
+them with ``pyarrow.parquet`` into a ``_staging-<uuid>/`` directory of
+the store, one file per task and pending batch. The driver then checks
+the committed batches' counts, moves only the files the tasks reported
+into fresh ``batch=<b>/`` directories, removes the staging directory and
+appends one record per batch. The store must therefore be a path that
+the driver and every executor see alike. A crash before the appends
+leaves unlogged directories that no snapshot reads, and perhaps a
+staging directory; the resume — the anti-join of work-units against the
+commit log — removes staging leftovers, rewrites the unlogged
+directories and never touches a committed one, and is refused if the
+corpus no longer matches a committed record's counts.
 
 The same rollup kernel also runs under real Structured Streaming
 (:func:`stream_rollup`): files-source → ``mapInArrow`` rollup →
@@ -26,19 +32,95 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+import numpy as np
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dtaianomaly_spark.rollup.tiers import ROLLUP_SCHEMA, rollup_tiers_map
+from dtaianomaly_spark.rollup.tiers import (
+    ROLLUP_SCHEMA, TIER_TICKS, _rollup_arrow_batch, rollup_tiers_map,
+)
+
+# A batch file's parquet layout is the one Spark's parquet-mr writer gave
+# it: one row group, snappy, and dictionary pages only on these columns
+# (parquet-mr falls back to plain pages for the near-unique sum, sumsq,
+# mean and std; pyarrow's default, a dictionary on every column, stores
+# ~15 % more bytes per point).
+_DICTIONARY_COLUMNS = ["doc_id", "tier", "bucket", "cnt", "min", "max",
+                       "first", "last"]
+
+# What each task of a run reports per batch.
+_TASK_SCHEMA = ", ".join(
+    ["batch long", "series long", "tokens long", "path string", "bytes long"]
+    + [f"points_{tier} long" for tier in TIER_TICKS]
+)
 
 
 def _residue(doc_id: Column, n_batches: int) -> Column:
     """The batch of a series, in ``[0, n_batches)``: abs of the residue,
     not of the hash, since abs(Long.MIN_VALUE) overflows."""
     return F.abs(F.xxhash64(doc_id.cast("string")) % n_batches)
+
+
+def _write_pending(n_batches: int, pending: list, staging: str):
+    """The ``mapInArrow`` function of a run, over ``doc_id, tokens, batch``
+    rows. A task counts every batch's series and tokens in exact int64,
+    rolls up the rows of the ``pending`` batches with the ingest kernel
+    and writes each pending batch's rollup to one parquet file
+    ``<staging>/batch=<b>/part-<partition>-<attempt id>.parquet``. It
+    yields one row per batch: the counts, and the file's path (null when
+    the task has no rows of that batch), bytes and points per tier."""
+
+    def task(batches):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark import TaskContext
+
+        series = np.zeros(n_batches, np.int64)
+        tokens = np.zeros(n_batches, np.int64)
+        points = np.zeros((n_batches, len(TIER_TICKS)), np.int64)
+        parts = {b: [] for b in pending}
+        for batch in batches:
+            ids = batch.column("batch").to_numpy()
+            lens = batch.column("tokens").value_lengths().fill_null(0)
+            counts = np.bincount(ids, minlength=n_batches)
+            series += counts
+            np.add.at(tokens, ids, lens.to_numpy())
+            # rows grouped by batch, in input order within a batch
+            rows = batch.take(pa.array(np.argsort(ids, kind="stable")))
+            start = np.cumsum(counts) - counts
+            for b in pending:
+                rolled = _rollup_arrow_batch(
+                    rows.slice(int(start[b]), int(counts[b])))
+                for i, tier in enumerate(rolled):  # raw, 1m, 1h
+                    points[b, i] += tier.num_rows
+                parts[b] += rolled
+
+        ctx = TaskContext.get()
+        name = f"part-{ctx.partitionId():05d}-{ctx.taskAttemptId()}.parquet"
+        paths, sizes = [None] * n_batches, [0] * n_batches
+        for b, rolled in parts.items():
+            if not rolled:
+                continue
+            paths[b] = os.path.join(staging, f"batch={b}", name)
+            os.makedirs(os.path.dirname(paths[b]), exist_ok=True)
+            table = pa.Table.from_batches(rolled)
+            pq.write_table(table, paths[b], row_group_size=table.num_rows,
+                           compression="snappy",
+                           use_dictionary=_DICTIONARY_COLUMNS)
+            sizes[b] = os.path.getsize(paths[b])
+        yield pa.RecordBatch.from_pydict({
+            "batch": np.arange(n_batches), "series": series, "tokens": tokens,
+            "path": pa.array(paths, pa.string()),
+            "bytes": np.array(sizes, np.int64),
+            **{f"points_{tier}": points[:, i]
+               for i, tier in enumerate(TIER_TICKS)},
+        })
+
+    return task
 
 
 class IncrementalRollup:
@@ -92,19 +174,26 @@ class IncrementalRollup:
     def run(self, corpus: DataFrame) -> int:
         """Roll up every not-yet-committed batch in one Spark job, then log
         one record per batch in batch order; returns the number logged.
-        ``wall_ms`` is the whole job's wall time. A batch with no tokens
+        A record holds the batch's ``series`` and ``tokens``, and the
+        ``files``, ``bytes`` and ``points`` per tier of its directory;
+        ``wall_ms`` is the whole run's wall time. A batch with no tokens
         writes no directory: its ``path`` is ``None``.
+
+        The job's tasks write the pending batches' files into a fresh
+        ``_staging-<uuid>/`` directory (staging directories a crashed run
+        left are removed first). Only the files the tasks reported then
+        replace each pending ``batch=<b>/`` directory, so a file of a
+        failed or speculative task attempt is never published.
 
         Each record stores ``n_batches``. A log holding a batch record
         with another value raises ``ValueError`` before anything is
         written: its batch ids name other series, so resuming would
         duplicate or drop them. Records without the key predate it and
         are accepted. A committed record whose series or token count
-        differs from the corpus's raises ``ValueError`` naming its batch,
-        and nothing is logged: the pending directories just written stay
-        unlogged, as after a crash. Not detected: a changed corpus when
-        nothing is pending (returns 0 without a scan), and a token value
-        changed without a change in any length."""
+        differs from the corpus's raises ``ValueError`` naming its batch;
+        then nothing is published or logged. Not detected: a changed
+        corpus when nothing is pending (returns 0 without a scan), and a
+        token value changed without a change in any length."""
         done = self.committed()
         other = {r.get("n_batches", self.n_batches) for r in done.values()}
         other.discard(self.n_batches)
@@ -117,37 +206,59 @@ class IncrementalRollup:
         if not pending:
             return 0
         t0 = time.perf_counter()
-        batch = _residue(F.col("doc_id"), self.n_batches)
-        obs = Observation()
-        part = corpus.observe(
-            obs,
-            *(F.count_if(batch == b).alias(f"series{b}")
-              for b in range(self.n_batches)),
-            *(F.sum(F.when(batch == b, F.col("n_tok"))).alias(f"tokens{b}")
-              for b in range(self.n_batches)),
-        ).filter(batch.isin(pending))
-        (
-            rollup_tiers_map(part).withColumn("batch", batch)
-            .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch").parquet(self.store_dir)
-        )
-        stats = obs.get
-        counts = {b: (stats[f"series{b}"], int(stats[f"tokens{b}"] or 0))
-                  for b in range(self.n_batches)}
+        for name in os.listdir(self.store_dir):
+            if name.startswith("_staging-"):
+                shutil.rmtree(os.path.join(self.store_dir, name))
+        staging = os.path.join(self.store_dir, f"_staging-{uuid.uuid4().hex}")
+        reports = corpus.select(
+            F.col("doc_id").cast("string").alias("doc_id"), "tokens",
+            _residue(F.col("doc_id"), self.n_batches).alias("batch"),
+        ).mapInArrow(
+            _write_pending(self.n_batches, pending, staging), _TASK_SCHEMA
+        ).collect()
+
+        recs = [{"batch": b, "n_batches": self.n_batches, "series": 0,
+                 "tokens": 0, "bytes": 0,
+                 "points": dict.fromkeys(TIER_TICKS, 0)}
+                for b in range(self.n_batches)]
+        files = {b: [] for b in pending}
+        for r in reports:
+            rec = recs[r["batch"]]
+            rec["series"] += r["series"]
+            rec["tokens"] += r["tokens"]
+            rec["bytes"] += r["bytes"]
+            for tier in TIER_TICKS:
+                rec["points"][tier] += r[f"points_{tier}"]
+            if r["path"] is not None:
+                files[r["batch"]].append(r["path"])
         changed = [b for b in sorted(done)
-                   if (done[b]["series"], done[b]["tokens"]) != counts[b]]
+                   if (done[b]["series"], done[b]["tokens"])
+                   != (recs[b]["series"], recs[b]["tokens"])]
         if changed:
+            shutil.rmtree(staging, ignore_errors=True)
             raise ValueError(f"the corpus changed since batches {changed}"
                              f" of {self.log_path} were committed")
+        self._publish(files)
+        shutil.rmtree(staging, ignore_errors=True)
         wall_ms = int(1000 * (time.perf_counter() - t0))
         for b in pending:
-            series, tokens = counts[b]
-            self._append_commit({
-                "batch": b, "n_batches": self.n_batches,
-                "series": series, "tokens": tokens, "wall_ms": wall_ms,
-                "path": f"batch={b}" if tokens else None, "ts": time.time(),
-            })
+            self._append_commit(dict(
+                recs[b], files=len(files[b]), wall_ms=wall_ms,
+                path=f"batch={b}" if files[b] else None, ts=time.time(),
+            ))
         return len(pending)
+
+    def _publish(self, files: dict) -> None:
+        """Replace each batch's ``batch=<b>/`` directory by one holding
+        exactly ``files[b]`` (none: no directory), moved by rename."""
+        for b, paths in files.items():
+            out = os.path.join(self.store_dir, f"batch={b}")
+            if os.path.isdir(out):
+                shutil.rmtree(out)
+            if paths:
+                os.makedirs(out)
+            for path in paths:
+                os.replace(path, os.path.join(out, os.path.basename(path)))
 
     # -- snapshot time travel + compaction ----------------------------------
 

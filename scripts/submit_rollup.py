@@ -11,6 +11,10 @@ Usage:
 Runs the checkpoint-resumable all-tier rollup over the token corpus
 derived from <sf_dir>/documents.parquet, writes the tier store +
 commit log to <output_dir>, and prints a one-line JSON summary.
+<output_dir> must be a path that the driver and every executor see
+alike (a shared mount on a cluster): the executors' tasks write the
+batch files into a staging directory under it, and the driver renames
+them into place and appends the commit log there.
 """
 
 import json

@@ -112,8 +112,8 @@ def _jobs_of(spark, fn):
 
 
 def test_incremental_rollup_runs_one_spark_job_per_run(spark, tmp_path, monkeypatch):
-    """A run is one Spark job however many batches are pending: one scan
-    and one partitioned write cover them all, and the write observes
+    """A run is one Spark job however many batches are pending: its tasks
+    scan the corpus once, write every pending batch's files and report
     every batch's series and token counts, so no second query runs."""
     from dtaianomaly_spark.streaming.incremental import IncrementalRollup
 
@@ -190,6 +190,137 @@ def test_sigkill_between_write_and_commit_resumes_exactly(spark, tmp_path):
     assert [r["batch"] for r in inc.snapshots()] == [0, 1, 2, 3]
     assert files_of(committed_dir) == before  # same names, same mtimes
     assert _canon(inc.read_store(spark)) == _canon(rollup_once(corpus))
+
+
+def _store_rows(spark, store):
+    """Every row of the store's batch directories, ``batch`` included."""
+    return sorted(tuple(r) for r in spark.read.parquet(store).collect())
+
+
+def _staging_dirs(store):
+    return glob.glob(os.path.join(store, "_staging-*"))
+
+
+def test_commit_records_count_files_bytes_and_points(spark, tmp_path):
+    """Each batch record counts its directory: ``files`` parquet files
+    holding ``bytes`` bytes on disk and ``points`` rows per tier."""
+    from dtaianomaly_spark.streaming.incremental import IncrementalRollup
+
+    store = str(tmp_path / "store")
+    inc = IncrementalRollup(store, n_batches=3)
+    assert inc.run(_corpus(spark)) == 3
+    per_tier = {
+        (r["batch"], r["tier"]): r["count"]
+        for r in spark.read.parquet(store).groupBy("batch", "tier").count()
+        .collect()
+    }
+    for rec in inc.snapshots():
+        out = os.path.join(store, rec["path"])
+        names = os.listdir(out)
+        assert rec["files"] == len(names) > 0
+        assert all(n.endswith(".parquet") for n in names)
+        assert rec["bytes"] == sum(
+            os.path.getsize(os.path.join(out, n)) for n in names)
+        assert rec["points"] == {
+            tier: per_tier[rec["batch"], tier] for tier in T.TIER_TICKS}
+
+
+def test_crash_before_publish_is_cleaned_up_by_the_resume(
+    spark, tmp_path, monkeypatch
+):
+    """A run that dies after its job but before it publishes leaves its
+    staging directory and no record; the resume removes the staging
+    directory and stores the same rows as a clean run."""
+    from dtaianomaly_spark.streaming.incremental import IncrementalRollup
+
+    corpus = _corpus(spark)
+    store, clean = str(tmp_path / "store"), str(tmp_path / "clean")
+
+    def crash(self, files):
+        raise _Crash
+
+    with monkeypatch.context() as m:
+        m.setattr(IncrementalRollup, "_publish", crash)
+        with pytest.raises(_Crash):
+            IncrementalRollup(store, n_batches=3).run(corpus)
+    (staging,) = _staging_dirs(store)
+    assert glob.glob(os.path.join(staging, "batch=*", "*.parquet"))
+    assert not glob.glob(os.path.join(store, "batch=*"))
+    assert IncrementalRollup(store, n_batches=3).snapshots() == []
+
+    assert IncrementalRollup(store, n_batches=3).run(corpus) == 3
+    assert _staging_dirs(store) == []
+    assert IncrementalRollup(clean, n_batches=3).run(corpus) == 3
+    assert _store_rows(spark, store) == _store_rows(spark, clean)
+
+
+def test_unreported_staging_file_is_never_published(
+    spark, tmp_path, monkeypatch
+):
+    """A parquet file in staging that no task reported, as a failed or
+    speculative task attempt leaves, stays out of every ``batch=<b>/``
+    and is removed with the staging directory."""
+    from dtaianomaly_spark.streaming.incremental import IncrementalRollup
+
+    corpus = _corpus(spark)
+    store = str(tmp_path / "store")
+    publish, strays = IncrementalRollup._publish, []
+
+    def publish_beside_a_stray(self, files):
+        for paths in files.values():
+            stray = os.path.join(os.path.dirname(paths[0]),
+                                 "part-00000-999999.parquet")
+            shutil.copy(paths[0], stray)
+            strays.append(stray)
+        publish(self, files)
+
+    monkeypatch.setattr(IncrementalRollup, "_publish", publish_beside_a_stray)
+    inc = IncrementalRollup(store, n_batches=3)
+    assert inc.run(corpus) == 3
+    assert len(strays) == 3
+    published = glob.glob(os.path.join(store, "batch=*", "*"))
+    assert published and not {os.path.basename(p) for p in published} & {
+        os.path.basename(p) for p in strays}
+    assert _staging_dirs(store) == []
+    assert sum(r["files"] for r in inc.snapshots()) == len(published)
+    full = _canon(rollup_once(corpus))
+    assert _canon(inc.read_store(spark)) == full
+    assert _canon(spark.read.parquet(store)) == full
+
+
+def test_batch_files_keep_the_parquet_mr_layout(spark, tmp_path):
+    """Batch files are laid out as Spark's parquet-mr writer laid them
+    out: one snappy row group per file and no dictionary on the
+    near-unique ``sum``, ``sumsq``, ``mean`` and ``std``. Spark and
+    ``pyarrow.dataset`` (hive partitioning, as perfbench reads the
+    store) both read ``ROLLUP_SCHEMA`` plus the ``batch`` column."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import IntegerType
+
+    from dtaianomaly_spark.streaming.incremental import IncrementalRollup
+
+    store = str(tmp_path / "store")
+    IncrementalRollup(store, n_batches=2).run(_corpus(spark))
+    files = glob.glob(os.path.join(store, "batch=*", "*.parquet"))
+    assert files
+    plain = {"sum", "sumsq", "mean", "std"}
+    for f in files:
+        meta = pq.ParquetFile(f).metadata
+        assert meta.num_row_groups == 1
+        for i in range(meta.num_columns):
+            col = meta.row_group(0).column(i)
+            assert col.compression == "SNAPPY"
+            assert col.has_dictionary_page == (col.path_in_schema not in plain)
+
+    want = [(f.name, f.dataType) for f in T.ROLLUP_SCHEMA]
+    assert [(f.name, f.dataType) for f in spark.read.parquet(store).schema] \
+        == want + [("batch", IntegerType())]
+    data = ds.dataset(store, format="parquet", partitioning="hive")
+    assert [(f.name, f.type) for f in data.schema] == [
+        (name, to_arrow_type(t)) for name, t in want] + [("batch", pa.int32())]
 
 
 def test_commit_log_fsyncs_temp_file_then_renames_then_fsyncs_dir(
@@ -341,8 +472,8 @@ def test_resume_over_changed_corpus_is_refused(
     """A resume rolls up only the pending batches, so a series added to,
     removed from or shortened in a committed batch would leave the store
     wrong without notice. The run compares every committed record with
-    the corpus's counts and refuses: nothing is logged and the committed
-    directories keep their files."""
+    the corpus's counts and refuses: nothing is logged, the committed
+    directories keep their files and no staging directory is left."""
     from dtaianomaly_spark.streaming.incremental import IncrementalRollup
 
     twelve = _corpus(spark).orderBy("doc_id").limit(12)
@@ -381,6 +512,7 @@ def test_resume_over_changed_corpus_is_refused(
         IncrementalRollup(store, 4).run(spark.createDataFrame(rows, twelve.schema))
     assert len(before[0].splitlines()) == 2
     assert committed_files() == before  # same log, same sizes and mtimes
+    assert _staging_dirs(store) == []
 
 
 def test_fewer_than_one_batch_is_refused(tmp_path):
