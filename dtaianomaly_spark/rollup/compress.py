@@ -4,8 +4,10 @@ Per-window statistics at each retention tier are stored as per-series
 compressed blocks, one delta-of-delta ``BinaryType`` column per exact
 int64 partial (kernels/codec.py; Facebook Gorilla, VLDB'15 §4.1,
 reimplemented from the paper's bit layouts). Nothing derivable is
-stored: ``bucket`` runs ``0 .. n_points - 1`` within a block, and
-``mean``/``std`` are derived on decode by the one shared formula.
+stored: a blob is a bare block body with no count, its row's
+``n_points`` gives the count of every blob of the row, ``bucket`` runs
+``0 .. n_points - 1`` within a block, and ``mean``/``std`` are derived
+on decode by the one shared formula.
 
 Physical shape: :func:`rollup_compress_map` is one map-only
 ``mapInArrow`` pass. It rolls each Arrow batch up with the batched
@@ -13,9 +15,12 @@ kernel behind :func:`~dtaianomaly_spark.rollup.tiers.rollup_tiers_map`
 and encodes each (series, tier) as one row of blocks; each column of a
 tier batch is encoded, all its blocks at once, in one segmented
 ``dod_encode_blocks`` pass. Decompression (:func:`decompress_tiers`) is
-the exact inverse, also a ``mapInArrow`` that builds its rows with the
-ingest's own batch builder; the round trip is tested, so queries can be
-served straight from compressed blocks.
+the exact inverse, also a ``mapInArrow``: each column of a batch is
+decoded, all its blocks at once, by one ``dod_decode_blocks`` call, and
+the rows are built with the ingest's own batch builder. A blob that does
+not hold exactly ``n_points`` codes and its pad fails the read, naming
+its (doc_id, tier). The round trip is tested, so queries can be served
+straight from compressed blocks.
 """
 
 from __future__ import annotations
@@ -77,21 +82,21 @@ def rollup_compress_map(corpus: DataFrame) -> DataFrame:
 
 
 def _decode_batch(batch):
-    """Rollup rows of one batch of compressed blocks. ``bucket`` comes
-    from ``n_points``, so a block whose streams do not all hold exactly
-    ``n_points`` values raises ``ValueError`` naming (doc_id, tier)."""
+    """Rollup rows of one batch of compressed blocks, each column decoded
+    by one :func:`~dtaianomaly_spark.kernels.codec.dod_decode_blocks`
+    call. ``bucket`` comes from ``n_points``, so a block whose blobs do
+    not all hold exactly ``n_points`` values raises ``ValueError`` naming
+    (doc_id, tier)."""
     n_points = batch.column("n_points").to_numpy()
-    streams = [[KC.dod_decode(b) for b in batch.column(f"{c}_enc").to_pylist()]
-               for c in INT_COLS]
-    lens = np.array([[s.shape[0] for s in col] for col in streams])
-    bad = np.flatnonzero((lens != n_points).any(axis=0))
-    if bad.size:
-        i = int(bad[0])
-        block = (batch.column("doc_id")[i].as_py(), batch.column("tier")[i].as_py())
-        raise ValueError(f"compressed block {block} has n_points={n_points[i]} "
-                         f"but streams of {lens[:, i].tolist()} values")
+    st = {}
+    for f, c in zip(STAT_FIELDS, INT_COLS):
+        try:
+            st[f] = KC.dod_decode_blocks(batch.column(f"{c}_enc"), n_points)
+        except KC.BlockError as e:
+            block = (batch.column("doc_id")[e.block].as_py(),
+                     batch.column("tier")[e.block].as_py())
+            raise ValueError(f"compressed block {block}: its {c}_enc {e.reason}") from None
     _, doc_idx, local = _blocks(n_points)
-    st = dict(zip(STAT_FIELDS, (np.concatenate(col) for col in streams)))
     return _tier_batch(batch.column("doc_id"), batch.column("tier"), doc_idx, local, st)
 
 

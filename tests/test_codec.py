@@ -31,46 +31,49 @@ def naive_pack_bits(codes, lens) -> bytes:
     return np.packbits(bits).tobytes()
 
 
-_NAIVE_BUCKETS = (  # (lo, hi, prefix, prefix_len, payload_bits, bias)
-    (-63, 64, 0b10, 2, 7, 63),
-    (-255, 256, 0b110, 3, 9, 255),
-    (-2047, 2048, 0b1110, 4, 12, 2047),
-)
+def _wrap(x: int) -> int:
+    """A Python int wrapped into int64."""
+    return (x + 2**63) % 2**64 - 2**63
+
+
+def _unzigzag(z: int) -> int:
+    return z >> 1 if z % 2 == 0 else -(z >> 1) - 1
+
+
+def _escape_zigzags(width: int) -> tuple[int, int]:
+    """The least and greatest zigzag(D) of ``width`` bits outside every
+    bucket: 4095 (D = -2048) is the one of 12 bits, and 4096 (D = 2048)
+    is in the 12-bit bucket."""
+    return (4095 if width == 12 else max(2 ** (width - 1), 4097)), 2**width - 1
+
+
+def naive_dod_body(values) -> bytes:
+    """The block body of one int64 stream, built one bit at a time from
+    Python ints: the independent twin of ``codec.dod_encode_blocks``."""
+    v = [int(x) for x in values]
+    # v0 and delta0 from an implicit (0, 0) start, then delta-of-deltas
+    dods = v[:1] + [_wrap(b - a) for a, b in zip(v, v[1:2])]
+    dods += [_wrap((c - b) - (b - a)) for a, b, c in zip(v, v[1:], v[2:])]
+    bits = ""
+    for d in dods:
+        if d == 0:
+            bits += "0"
+        elif -63 <= d <= 64:
+            bits += "10" + f"{d + 63:07b}"
+        elif -255 <= d <= 256:
+            bits += "110" + f"{d + 255:09b}"
+        elif -2047 <= d <= 2048:
+            bits += "1110" + f"{d + 2047:012b}"
+        else:
+            z = 2 * d if d >= 0 else -2 * d - 1
+            bits += "1111" + f"{z.bit_length() - 1:06b}" + f"{z:b}"
+    bits += "1" * (-len(bits) % 8)
+    return int(bits, 2).to_bytes(len(bits) // 8, "big") if bits else b""
 
 
 def naive_dod_encode(values) -> bytes:
-    """Delta-of-delta encode one block on its own: the independent twin
-    of ``codec.dod_encode_blocks``, one stream per call."""
-    v = np.asarray(values, dtype=np.int64)
-    n = v.shape[0]
-    header = np.uint32(n).tobytes()
-    if n == 0:
-        return header
-    codes = [np.array([v[0]], dtype=np.uint64)]
-    lens = [np.array([64], dtype=np.int64)]
-    if n >= 2:
-        deltas = np.diff(v)
-        codes.append(np.array([deltas[0]], dtype=np.int64).astype(np.uint64))
-        lens.append(np.array([64], dtype=np.int64))
-        if n >= 3:
-            d = np.diff(deltas)
-            c2 = np.zeros((d.shape[0], 2), dtype=np.uint64)
-            l2 = np.zeros((d.shape[0], 2), dtype=np.int64)
-            done = d == 0
-            l2[done, 0] = 1
-            for lo, hi, prefix, plen, bits, bias in _NAIVE_BUCKETS:
-                sel = (~done) & (d >= lo) & (d <= hi)
-                c2[sel, 0] = (np.uint64(prefix) << np.uint64(bits)) | (
-                    (d[sel] + bias).astype(np.uint64)
-                )
-                l2[sel, 0] = plen + bits
-                done |= sel
-            # '1111' + 64-bit two's complement, as two pairs
-            c2[~done, 0], l2[~done, 0] = 0b1111, 4
-            c2[~done, 1], l2[~done, 1] = d[~done].astype(np.uint64), 64
-            codes.append(c2.ravel())
-            lens.append(l2.ravel())
-    return header + naive_pack_bits(np.concatenate(codes), np.concatenate(lens))
+    """The one-stream framing of ``naive_dod_body``: its u32 count first."""
+    return np.uint32(len(values)).tobytes() + naive_dod_body(values)
 
 
 def _from_dods(*dods):
@@ -92,6 +95,8 @@ class TestDeltaOfDelta:
             list(range(0, 10000, 60)),
             [0, 2**63 - 1, 0],  # deltas wrap at 64 bits
             [-2**63, 0, 2**63 - 1],
+            [-2**63],  # 64-bit escapes as v0
+            [2**63 - 1, -2**63],
             # a delta-of-delta on each bucket edge, then one past it
             pytest.param(_from_dods(-63, 64), id="dod_edge_7bit"),
             pytest.param(_from_dods(-64, 65), id="dod_past_7bit"),
@@ -108,8 +113,19 @@ class TestDeltaOfDelta:
     def test_regular_timestamps_compress_well(self):
         ts = np.arange(0, 3600_000, 60_000, dtype=np.int64)  # 60 points
         enc = codec.dod_encode(ts)
-        # header 4B + two 64-bit seeds + ~1 bit per point
-        assert len(enc) <= 4 + 16 + (ts.shape[0] // 8) + 2
+        # header 4B, v0 = 0 as '0', delta0 = 60 000 as a 27-bit escape,
+        # then one '0' per point
+        assert len(enc) == 4 + -(-(1 + 27 + 58) // 8)
+
+    @pytest.mark.parametrize("width", range(12, 65))
+    def test_escape_of_every_width(self, width):
+        """An escape codes zigzag(D) in exactly its bit length, 12 .. 64."""
+        for d in map(_unzigzag, _escape_zigzags(width)):
+            v = np.asarray(_from_dods(d), dtype=np.int64)
+            enc = codec.dod_encode(v)
+            assert len(enc) == 4 + -(-(2 + 10 + width) // 8)
+            assert enc == naive_dod_encode(v)
+            assert np.array_equal(codec.dod_decode(enc), v)
 
     @settings(max_examples=100, deadline=None)
     @given(st.lists(INT64, max_size=200))
@@ -118,19 +134,30 @@ class TestDeltaOfDelta:
         assert np.array_equal(codec.dod_decode(codec.dod_encode(v)), v)
 
 
+# escapes of every width: zigzag(D) of 12 .. 64 bits outside the buckets
+ESCAPES = st.integers(12, 64).flatmap(
+    lambda w: st.integers(*_escape_zigzags(w))).map(_unzigzag)
+DODS = (st.integers(-2100, 2100) | ESCAPES | st.sampled_from([-(2**63), 2**63 - 1])
+        | INT64)
+
+
 @st.composite
 def block_layouts(draw):
     """One int64 column and its block heads: one block or many, with
-    empty, 1- and 2-value blocks; values full-range or integrated from
-    delta-of-deltas around the bucket edges."""
+    empty, 1- and 2-value blocks; values full-range or integrated, block
+    by block, from drawn delta-of-deltas (v0 and delta0 included) around
+    the bucket edges, escapes of every width and +-2**63."""
     lens = draw(st.lists(st.one_of(st.integers(0, 2), st.integers(1, 40)),
                          min_size=1, max_size=12))
     n = sum(lens)
     if draw(st.booleans()):
         values = np.array(draw(st.lists(INT64, min_size=n, max_size=n)), dtype=np.int64)
     else:
-        dods = draw(st.lists(st.integers(-2100, 2100) | INT64, min_size=n, max_size=n))
-        values = np.cumsum(np.cumsum(np.array(dods, dtype=np.int64)))  # wraps
+        dods = np.array(draw(st.lists(DODS, min_size=n, max_size=n)), dtype=np.int64)
+        bounds = np.cumsum([0] + lens)
+        values = np.concatenate([np.zeros(0, dtype=np.int64)] + [
+            np.cumsum(np.concatenate([d[:1], np.cumsum(d[1:])]))  # wraps
+            for d in (dods[s:e] for s, e in zip(bounds[:-1], bounds[1:]))])
     return values, np.cumsum([0] + lens[:-1])
 
 
@@ -138,12 +165,43 @@ def block_layouts(draw):
 @given(block_layouts())
 def test_dod_encode_blocks_matches_per_block_twin(layout):
     """Every blob of the one-pass segmented encode equals the per-block
-    twin's blob of that block: no delta leaks across a block edge."""
+    twin's body of that block: no delta leaks across a block edge."""
     values, heads = layout
     got = codec.dod_encode_blocks(values, heads).to_pylist()
     bounds = np.append(heads, values.shape[0])
-    assert got == [naive_dod_encode(values[s:e]) for s, e in zip(bounds[:-1], bounds[1:])]
+    assert got == [naive_dod_body(values[s:e]) for s, e in zip(bounds[:-1], bounds[1:])]
     assert codec.dod_encode(values) == naive_dod_encode(values)
+
+
+@settings(max_examples=200, deadline=None)
+@given(block_layouts())
+def test_dod_decode_blocks_round_trip(layout):
+    """One whole-column decode returns every block's values, from an
+    Arrow array, a slice of it, or a list of bytes."""
+    values, heads = layout
+    n = np.diff(np.append(heads, values.shape[0]))
+    blobs = codec.dod_encode_blocks(values, heads)
+    assert np.array_equal(codec.dod_decode_blocks(blobs, n), values)
+    assert np.array_equal(codec.dod_decode_blocks(blobs.to_pylist(), n), values)
+    if heads.shape[0] > 1:
+        got = codec.dod_decode_blocks(blobs.slice(1), n[1:])
+        assert np.array_equal(got, values[heads[1]:])
+
+
+@settings(max_examples=200, deadline=None)
+@given(block_layouts(), st.data())
+def test_dod_decode_blocks_rejects_a_count_off_by_one(layout, data):
+    """A count one too high or one too low fails on that block: the
+    one-bit pad holds no complete code, and every code is a 0 bit or
+    8 bits or longer."""
+    values, heads = layout
+    n = np.diff(np.append(heads, values.shape[0]))
+    blobs = codec.dod_encode_blocks(values, heads)
+    b = data.draw(st.integers(0, n.shape[0] - 1))
+    n[b] += data.draw(st.sampled_from([-1, 1]))
+    with pytest.raises(codec.BlockError) as err:
+        codec.dod_decode_blocks(blobs, n)
+    assert err.value.block == b
 
 
 @settings(max_examples=100, deadline=None)

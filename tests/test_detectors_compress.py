@@ -146,10 +146,10 @@ def test_compress_roundtrip_matches_brute_force_stats(brute_force_corpus):
 
 def test_compressed_blobs_equal_per_block_encoding(brute_force_corpus):
     """Every ``*_enc`` blob of ``rollup_compress_map`` equals the per-block
-    twin encoder applied to that (doc_id, tier)'s column of
-    ``rollup_tiers_map``: the one-pass encode of a whole tier batch leaks
-    no delta across a block edge."""
-    from test_codec import naive_dod_encode
+    twin's body of that (doc_id, tier)'s column of ``rollup_tiers_map``:
+    the one-pass encode of a whole tier batch leaks no delta across a
+    block edge."""
+    from test_codec import naive_dod_body
 
     from dtaianomaly_spark.rollup import compress as CMP
     from dtaianomaly_spark.rollup import tiers as T
@@ -164,7 +164,7 @@ def test_compressed_blobs_equal_per_block_encoding(brute_force_corpus):
     for key, rows in columns.items():
         assert blocks[key]["n_points"] == len(rows), key
         for c in CMP.INT_COLS:
-            want = naive_dod_encode(np.array([r[c] for r in rows], dtype=np.int64))
+            want = naive_dod_body([r[c] for r in rows])
             assert bytes(blocks[key][f"{c}_enc"]) == want, (key, c)
 
 
@@ -179,6 +179,25 @@ def test_compression_beats_raw_on_long_blocks(spark):
     assert raw["raw"] > 2.0  # delta-of-delta beats the 8-byte raw layout
     blobs = compressed.select(*(f"{c}_enc" for c in CMP.INT_COLS)).collect()
     assert rep[0]["enc_bytes"] == sum(len(b) for r in blobs for b in r)
+
+
+def test_compression_ratio_above_2_on_every_tier(spark):
+    """On synthetic series of every source kind, each tier's blobs take
+    less than half of the 8-byte-per-field layout; fixed-width heads once
+    put the 1m and 1h tiers near 1."""
+    import pyarrow as pa
+
+    from dtaianomaly_spark.rollup import compress as CMP
+
+    series = [C.synthetic_series(i, seed=7)[0] for i in range(50)]
+    table = pa.table({
+        "doc_id": pa.array([f"doc-{i}" for i in range(len(series))], pa.string()),
+        "tokens": pa.array(series, pa.list_(pa.int32())),
+    })
+    compressed = CMP.rollup_compress_map(spark.createDataFrame(table))
+    ratios = {r["tier"]: r["ratio"] for r in CMP.compression_report(compressed).collect()}
+    assert ratios.keys() == {"raw", "1m", "1h"}
+    assert all(r > 2.0 for r in ratios.values()), ratios
 
 
 def test_null_tokens_roll_up_as_empty_series(spark):
@@ -206,41 +225,48 @@ def _one_series_blocks(spark):
     """The three compressed blocks (raw, 1m, 1h) of one 40-tick series."""
     from dtaianomaly_spark.rollup import compress as CMP
 
-    arrays = spark.createDataFrame(
-        [("a", list(range(40)))], "doc_id string, tokens array<int>"
-    )
+    arrays = spark.sql("SELECT * FROM VALUES ('a', sequence(0, 39)) AS t(doc_id, tokens)")
     return {r["tier"]: r.asDict() for r in CMP.rollup_compress_map(arrays).collect()}
 
 
-def test_decompress_rejects_n_points_mismatch(spark):
-    """bucket is rebuilt from n_points, so a block whose streams do not
-    hold exactly n_points values is rejected, naming (doc_id, tier)."""
-    import pytest
+def _blocks_frame(spark, blocks):
+    """A compressed-store frame of ``blocks``, built from a pyarrow Table."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
+    from dtaianomaly_spark.rollup import compress as CMP
+
+    schema = to_arrow_schema(CMP.COMPRESSED_SCHEMA)
+    return spark.createDataFrame(pa.Table.from_pylist(list(blocks.values()), schema))
+
+
+@pytest.mark.parametrize("extra", [1, -1], ids=["one_too_many", "one_too_few"])
+def test_decompress_rejects_n_points_mismatch(spark, extra):
+    """bucket is rebuilt from n_points, and no blob stores its own count,
+    so a block whose blobs do not hold exactly n_points values is
+    rejected, naming (doc_id, tier)."""
     from dtaianomaly_spark.rollup import compress as CMP
 
     blocks = _one_series_blocks(spark)
     assert blocks["raw"]["n_points"] == 3
-    blocks["raw"]["n_points"] = 4
-    bad = spark.createDataFrame(list(blocks.values()), CMP.COMPRESSED_SCHEMA)
+    blocks["raw"]["n_points"] = 3 + extra
     with pytest.raises(Exception, match=r"compressed block \('a', 'raw'\)"):
-        CMP.decompress_tiers(bad).collect()
+        CMP.decompress_tiers(_blocks_frame(spark, blocks)).collect()
 
 
 def test_decompress_rejects_truncated_blob(spark):
-    import pytest
-
     from dtaianomaly_spark.kernels import codec as KC
     from dtaianomaly_spark.rollup import compress as CMP
 
     blocks = _one_series_blocks(spark)
     blob = blocks["raw"]["sum_enc"]
-    with pytest.raises(ValueError, match="past the bit stream end"):
-        KC.dod_decode(blob[:6])
-    blocks["raw"]["sum_enc"] = blob[:6]
-    bad = spark.createDataFrame(list(blocks.values()), CMP.COMPRESSED_SCHEMA)
-    with pytest.raises(Exception, match="past the bit stream end"):
-        CMP.decompress_tiers(bad).collect()
+    with pytest.raises(KC.BlockError, match="past its end"):
+        KC.dod_decode_blocks([blob[:-1]], [3])
+    blocks["raw"]["sum_enc"] = blob[:-1]
+    with pytest.raises(
+        Exception, match=r"compressed block \('a', 'raw'\): its sum_enc .* past its end"
+    ):
+        CMP.decompress_tiers(_blocks_frame(spark, blocks)).collect()
 
 
 def test_sliding_znorm_dist_equals_single_ref_matrix_profile():
